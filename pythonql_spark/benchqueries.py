@@ -1987,12 +1987,16 @@ def curation_v2(spark, sf):
              .selectExpr("doc_id", "lang", "n_chars", _LINED + " as text"))
     # the C4 stage fans out to three consumers (kept-corpus, bench
     # shingles, and through them the whole downstream chain): pin it
-    # once (lazy localCheckpoint, same boundary trick as
-    # training_pipeline; measured −8% at sf0.1).  Unlike
-    # training_pipeline, scan fan-out + eager measured NEUTRAL here
-    # under interleaved A/B (3.59 lazy vs 3.52-4.27 variants): the C4
-    # line explode parallelizes through its own downstream shuffle, so
-    # the serial head is short and the extra exchange buys nothing.
+    # once (localCheckpoint(eager=False), same boundary trick as
+    # training_pipeline; measured −8% at sf0.1).  eager=False is not
+    # lazy under AQE: a checkpoint runs every shuffle stage beneath it
+    # at call time (sampling.global_index).  This one has none (C4 is
+    # one projection over the scan), but the ``clean`` pin below runs
+    # the whole Bloom chain while the plan is being built.  Unlike
+    # training_pipeline, scan fan-out + eager=True measured NEUTRAL
+    # here under interleaved A/B (3.59 s vs 3.52-4.27 s variants): the
+    # C4 line explode parallelizes through its own downstream shuffle,
+    # so the serial head is short and the extra exchange buys nothing.
     c4 = (c4_clean(lined, min_words=4, min_lines=2,
                    extra_cols=["lang", "n_chars"])
           .filter("c4_keep")).localCheckpoint(eager=False)
@@ -2000,8 +2004,11 @@ def curation_v2(spark, sf):
         "doc_id", "lang", "n_chars", "text")
     bench = c4.filter("doc_id % 97 = 0").select("text")
     flags = decontaminate_bloom(kept, bench, ngram=5)
+    # percentile_normalize reads ``clean`` twice (global_index's narrow
+    # path and the join back), so pin it too: unpinned, the Bloom
+    # decontamination and its joins run once per read
     clean = kept.join(flags.filter("NOT contaminated").select("doc_id"),
-                      "doc_id")
+                      "doc_id").localCheckpoint(eager=False)
     pct = percentile_normalize(
         clean.select("doc_id", "lang", "n_chars"), ["n_chars"])
     mix = select_to_budget(

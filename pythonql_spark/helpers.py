@@ -16,8 +16,13 @@ they are DataFrame-shaped:
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+_log = logging.getLogger(__name__)
+_infer_fallback_logged = False
 
 
 def ensure_event_time(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
@@ -130,10 +135,16 @@ def local_rows_df_infer(spark, rows, rows_per_slice: int = 200_000):
     env sequences): infer the schema exactly as ``createDataFrame``
     would — the same full-list merge, driver-side, no job — then
     parallelize in size-proportional slices.  Falls back to the plain
-    default-sliced path if the inference internals ever move."""
+    default-sliced path (logged once) if the inference internals ever
+    move."""
+    global _infer_fallback_logged
     rows = list(rows)
     try:
         schema = spark._inferSchemaFromList(rows, names=None)
-    except Exception:
+    except (AttributeError, TypeError) as e:
+        if not _infer_fallback_logged:
+            _infer_fallback_logged = True
+            _log.warning("local_rows_df_infer: schema inference internals "
+                         "unavailable (%s); using createDataFrame(rows)", e)
         return spark.createDataFrame(rows)
     return local_rows_df(spark, rows, schema, rows_per_slice)

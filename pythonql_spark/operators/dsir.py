@@ -80,7 +80,9 @@ def dsir_logweights(df: DataFrame, target_pred: str, *,
         f"explode({words(f'lower({text_col})')}) as tok")
         .filter("tok != ''")
         .withColumn("b", F.expr(b_expr)))
-    toks = toks.localCheckpoint(eager=False)  # explode once, use twice
+    # explode once, use twice; under AQE the checkpoint runs any
+    # shuffle stage in ``df`` at call time (sampling.global_index)
+    toks = toks.localCheckpoint(eager=False)
     # raw and target bucket counts in ONE pass: the conditional count
     # replaces a second full traversal of the token stream plus the
     # raw⋈target left join (a bucket with no target rows counts 0

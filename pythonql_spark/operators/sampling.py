@@ -181,7 +181,15 @@ def global_index(df: DataFrame, sort_cols=None, out_col: str = "pos",
     # materialize the partition layout ONCE: the numbering branch and
     # the offsets branch below must see the SAME partition boundaries,
     # and RangePartitioner's sampled split points are not contractually
-    # identical across re-executions of the exchange
+    # identical across re-executions of the exchange.  eager=False is
+    # not lazy under AQE: Dataset.checkpoint calls
+    # AdaptiveSparkPlanExec.execute, which runs every shuffle stage
+    # beneath it (the range bounds sample and exchange, plus any
+    # shuffle in ``df``) here, at call time; only the last stage waits
+    # for the first action.  So an unpinned input chain runs here,
+    # while the plan is being built: curation_v2's Bloom chain without
+    # its ``clean`` pin is 8 jobs, 2-3 s warm at sf0.1 (2 jobs, 0.3 s,
+    # with it).
     keyed = (keyed.withColumn("__pid", F.spark_partition_id())
              .localCheckpoint(eager=False))
 
@@ -353,6 +361,8 @@ def select_to_budget(df: DataFrame, strata_col: str,
     # treat every stratum (incl. NULL) as one ordinary group
     sk = F.when(F.col(strata_col).isNull(), F.lit("0")).otherwise(
         F.concat(F.lit("1"), F.col(strata_col).cast("string")))
+    # the checkpoint runs the range exchange (and any shuffle in
+    # ``df``) at call time under AQE — see global_index
     keyed = (_range_partition(df.withColumn("__sk", sk),
                               [F.col("__sk"), *ordcols], n_partitions)
              .withColumn("__pid", F.spark_partition_id())
@@ -664,6 +674,8 @@ def quantile_buckets(df: DataFrame, order_by: list[str], k: int, *,
     from pyspark.sql.types import LongType, StructField, StructType
     from pyspark.sql.window import Window as W
     ordcols = [_sort_col(e) for e in order_by]
+    # the checkpoint runs the range exchange (and any shuffle in
+    # ``df``) at call time under AQE — see global_index
     keyed = (_range_partition(df, ordcols, None)
              .withColumn("__pid", F.spark_partition_id())
              .localCheckpoint(eager=False))

@@ -84,7 +84,9 @@ def dup_span_stats(df: DataFrame, k: int = 8, *,
     # cost onto every consumer — interleaved A/B measured the fanned
     # form 1.24-1.28x SLOWER on the final r11 tree (reverted r12)
     kg = _kgram_rows(df, k, id_col, text_col)
-    kg = kg.localCheckpoint(eager=False)  # k-gram-ize once, use twice
+    # k-gram-ize once, use twice; under AQE the checkpoint runs any
+    # shuffle stage in ``df`` at call time (sampling.global_index)
+    kg = kg.localCheckpoint(eager=False)
     dup_h = (kg.groupBy("h").agg(F.count(F.lit(1)).alias("c"))
              .filter("c > 1").select("h"))
     dup = kg.join(dup_h, "h")
@@ -181,6 +183,8 @@ def strip_dup_spans(df: DataFrame, k: int = 8, *,
     use) plus ``n_removed_tokens``.
     """
     kg = _kgram_rows(df, k, id_col, text_col)
+    # under AQE the checkpoint runs any shuffle stage in ``df`` at call
+    # time (sampling.global_index)
     kg = kg.localCheckpoint(eager=False)
     holders = (kg.groupBy("h")
                .agg(F.count(F.lit(1)).alias("c"),

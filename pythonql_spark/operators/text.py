@@ -194,7 +194,9 @@ def unigram_logprob(df, text_col: str = "text",
     toks = (df.select(id_col, F.explode(
         F.expr(words(f"lower({text_col})"))).alias("tok"))
         .filter("tok != ''"))
-    toks = toks.localCheckpoint(eager=False)  # explode once, use twice
+    # explode once, use twice; under AQE the checkpoint runs any
+    # shuffle stage in ``df`` at call time (sampling.global_index)
+    toks = toks.localCheckpoint(eager=False)
     freq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt"))
     # total token count straight from toks — NOT sum(freq.cnt), which
     # would re-run the by-token shuffle a second time (freq feeds the
@@ -639,7 +641,9 @@ def bigram_logprob(df, text_col: str = "text",
                      F.expr(f"lag(col) OVER (PARTITION BY {id_col} "
                             f"ORDER BY pos)").alias("prev"))
              .filter("cur != ''"))
-    pairs = pairs.localCheckpoint(eager=False)  # one explode, four uses
+    # one explode, four uses; under AQE the checkpoint runs the lag
+    # window's exchange at call time (sampling.global_index)
+    pairs = pairs.localCheckpoint(eager=False)
     uni = pairs.groupBy("cur").agg(F.count(F.lit(1)).alias("cu"))
     total = pairs.agg(F.count(F.lit(1)).alias("n_total"))
     bi = (pairs.filter("prev IS NOT NULL")

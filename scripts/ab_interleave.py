@@ -14,6 +14,13 @@ Usage:
 
 Interpretation: identical code measures ratio 1.0 +/- ~0.1; treat
 anything inside [0.85, 1.15] as noise.  Medians over 2*reps runs.
+
+Limit: both variants share one SparkSession and one JVM, so this
+harness cannot measure JVM-wide or static settings (session confs such
+as ``spark.sql.codegen.cache.maxEntries``, JVM flags): both sides run
+under whichever value the session started with.  Measure such changes
+with separate-process pairs, one fresh JVM per run
+(``perfbench/run.py`` from each checkout, alternating).
 """
 
 from __future__ import annotations

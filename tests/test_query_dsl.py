@@ -62,6 +62,32 @@ def test_helpers(spark):
         == [True, False]
 
 
+def test_local_rows_df_infer_fallback(spark, monkeypatch, caplog):
+    """If pyspark's schema-inference internal moves, local_rows_df_infer
+    falls back to createDataFrame(rows): same rows, same schema, and
+    one logged warning however often the fallback runs."""
+    rows = [{"a": 1, "b": "x"}, {"a": 2, "b": None}, {"a": 3, "b": "z"}]
+
+    class Moved:
+        # the session without _inferSchemaFromList; deleting the method
+        # from SparkSession itself would also break createDataFrame,
+        # which calls it
+        def __getattr__(self, name):
+            if name == "_inferSchemaFromList":
+                raise AttributeError(name)
+            return getattr(spark, name)
+
+    monkeypatch.setattr(helpers, "_infer_fallback_logged", False)
+    with caplog.at_level("WARNING", logger="pythonql_spark.helpers"):
+        got = [helpers.local_rows_df_infer(Moved(), rows) for _ in range(2)]
+    want = spark.createDataFrame(rows)
+    for df in got:
+        assert df.schema == want.schema
+        assert df.collect() == want.collect()
+    assert len([r for r in caplog.records
+                if "local_rows_df_infer" in r.getMessage()]) == 1
+
+
 def test_rollup_and_percentile(spark):
     df = spark.createDataFrame(
         [("en", "web", 10), ("en", "web", 20), ("en", "book", 30),
