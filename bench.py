@@ -24,6 +24,7 @@ import time
 PROBE_MB = 256
 PROBE_CLEAN_MAX_S = 0.65          # ~1.4x the idle probe
 REF_RETIME_BAND = (0.18, 0.32)    # sf0.1 dedup_exact second-run band
+REF_RETIME_FLOOR_S = 0.05         # faster is a wrong or empty dataset
 LOADAVG1_CLEAN_MAX = 2.0          # read BEFORE bench loads the box
 
 
@@ -71,9 +72,10 @@ def clean_stamp(probe_pre_s: float, probe_post_s: float | None,
     that inflated single keys 3-9x (dedup_corpus_minhash 9.18 s vs
     its 1.6-2.1 s band) invisibly to every edge indicator.  The query
     loop therefore re-times the ref key every MID_RETIME_EVERY keys;
-    at the calibration config EVERY sample must sit in the band.
-    ``None`` (artifacts predating the gate) skips it; an empty list
-    (short runs) has nothing to violate."""
+    at the calibration config EVERY sample must sit in the band, and
+    a retime that failed is recorded as a ``None`` sample, which fails
+    it.  ``None`` (artifacts predating the gate) skips the gate; an
+    empty list (short runs) has nothing to violate."""
     if probe_pre_s > PROBE_CLEAN_MAX_S:
         return False
     if probe_post_s is not None and probe_post_s > PROBE_CLEAN_MAX_S:
@@ -81,18 +83,18 @@ def clean_stamp(probe_pre_s: float, probe_post_s: float | None,
     if loadavg1_pre > LOADAVG1_CLEAN_MAX:
         return False
     if sf == 0.1 and cpus == 32:
-        # high side only: load INFLATES the retime, never deflates it.
-        # Deep-warm sessions legitimately read below the calibrated
-        # floor (r12 close: mid samples 0.16-0.17 after 100+ keys of
-        # JIT warmth on an idle box) — a faster-than-band sample is
-        # evidence of an even cleaner box, not of load.  The recorded
-        # values keep the full reading either way.
+        # the band gates the high side: load INFLATES the retime,
+        # never deflates it.  Deep-warm sessions legitimately read
+        # below the calibrated floor (r12 close: mid samples 0.16-0.17
+        # after 100+ keys of JIT warmth on an idle box) — a
+        # faster-than-band sample is evidence of an even cleaner box,
+        # not of load.  The recorded values keep the full reading
+        # either way.  A hard floor far below the band still catches a
+        # mislabeled sf dir or a partial/empty input, which no amount
+        # of warmth explains.
         hi = REF_RETIME_BAND[1]
-        for r in (ref_retime_pre_s, ref_retime_s):
-            if r is None or r > hi:
-                return False
-        for r in (mid_retimes_s or []):
-            if r is None or r > hi:
+        for r in (ref_retime_pre_s, ref_retime_s, *(mid_retimes_s or [])):
+            if r is None or not REF_RETIME_FLOOR_S <= r <= hi:
                 return False
     return True
 
@@ -121,6 +123,42 @@ def _ref_retime(spark, QUERIES, ref_key: str, sf_dir: str,
         return round(sorted(samples)[2], 3)
     except Exception:
         return None
+
+
+def run_headline(spark, QUERIES, headline: list[str], sf_dir: str,
+                 ref_key: str):
+    """Time each headline key; returns (times, failed, mid_retimes,
+    loadavg1_per_key).
+
+    Steady-state methodology: each query runs once untimed (codegen
+    compilation, broadcast construction, executor-side imports are
+    per-shape one-offs amortized away on a long-lived cluster), and
+    the SECOND full run — plan construction included — is recorded.
+    One broken query must never zero the whole artifact: each query
+    is fenced, failures are reported per-name and the run continues."""
+    times: dict[str, float] = {}
+    failed: dict[str, str] = {}
+    mid_retimes: list[float | None] = []
+    loadavg1_per_key: dict[str, float] = {}
+    for i, name in enumerate(headline):
+        # mid-run burst gate (see clean_stamp): the ref-key retime is
+        # sampled THROUGH the run, between keys — it adds wall time to
+        # the session but touches no timed region and no per-key time.
+        # A failed retime is kept as None so the gate sees the gap.
+        if i and i % MID_RETIME_EVERY == 0 and ref_key in QUERIES:
+            mid_retimes.append(_ref_retime(spark, QUERIES, ref_key, sf_dir))
+        try:
+            QUERIES[name](spark, sf_dir).count()
+            t0 = time.perf_counter()
+            df = QUERIES[name](spark, sf_dir)
+            n = df.count()
+            times[name] = round(time.perf_counter() - t0, 3)
+            loadavg1_per_key[name] = round(os.getloadavg()[0], 2)
+            print(f"# {name}: {times[name]}s ({n} rows)", file=sys.stderr)
+        except Exception as e:
+            failed[name] = f"{type(e).__name__}: {str(e).splitlines()[0][:200]}"
+            print(f"# {name}: FAILED {failed[name]}", file=sys.stderr)
+    return times, failed, mid_retimes, loadavg1_per_key
 
 
 def main() -> None:
@@ -211,35 +249,8 @@ def main() -> None:
                                   warm_reps=10)
                       if ref_key in QUERIES else None)
 
-    # steady-state methodology: each query runs once untimed (codegen
-    # compilation, broadcast construction, executor-side imports are
-    # per-shape one-offs amortized away on a long-lived cluster), and
-    # the SECOND full run — plan construction included — is recorded.
-    # one broken query must never zero the whole artifact: each query
-    # is fenced, failures are reported per-name and the run continues
-    times: dict[str, float] = {}
-    failed: dict[str, str] = {}
-    mid_retimes: list[float] = []
-    loadavg1_per_key: dict[str, float] = {}
-    for i, name in enumerate(headline):
-        # mid-run burst gate (see clean_stamp): the ref-key retime is
-        # sampled THROUGH the run, between keys — it adds wall time to
-        # the session but touches no timed region and no per-key time
-        if i and i % MID_RETIME_EVERY == 0 and ref_key in QUERIES:
-            r = _ref_retime(spark, QUERIES, ref_key, sf_dir)
-            if r is not None:
-                mid_retimes.append(r)
-        try:
-            QUERIES[name](spark, sf_dir).count()
-            t0 = time.perf_counter()
-            df = QUERIES[name](spark, sf_dir)
-            n = df.count()
-            times[name] = round(time.perf_counter() - t0, 3)
-            loadavg1_per_key[name] = round(os.getloadavg()[0], 2)
-            print(f"# {name}: {times[name]}s ({n} rows)", file=sys.stderr)
-        except Exception as e:
-            failed[name] = f"{type(e).__name__}: {str(e).splitlines()[0][:200]}"
-            print(f"# {name}: FAILED {failed[name]}", file=sys.stderr)
+    times, failed, mid_retimes, loadavg1_per_key = run_headline(
+        spark, QUERIES, headline, sf_dir, ref_key)
 
     # load indicator (r8 verdict "what's wrong #1": a loaded-box rerun
     # silently overwrote the clean artifact and the round-over-round

@@ -58,8 +58,10 @@ def _split_as(e: str) -> tuple[str, str | None]:
 
 def _pack(source: DataFrame, var: str) -> DataFrame:
     """Pack a table's row into a single struct column named ``var``
-    (the PQTuple analog — reference PQTuple.py)."""
-    return source.select(F.struct(*[F.col(c) for c in source.columns]).alias(var))
+    (the PQTuple analog — reference PQTuple.py).  One star expression:
+    listing ``source.columns`` would cost a JVM analysis plus one py4j
+    call per column."""
+    return source.select(F.struct(F.col("*")).alias(var))
 
 
 class Query:

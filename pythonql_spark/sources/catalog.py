@@ -6,6 +6,12 @@ equivalents:
 
 * files — ``spark.read.parquet/csv/json``; predicate + column
   pushdown comes from Catalyst (verified in tests via explain).
+  ``load_table`` caches each local table's inferred schema and
+  timestamp fix-ups, keyed by the absolute path, a fingerprint of
+  every file under it (name, size, mtime_ns) and the session confs
+  that change parquet type mapping.  So a warm load builds its plan
+  with no Spark job.  Remote URIs (``s3a://``, ``hdfs://``), which
+  ``os.stat`` cannot see, are never cached.
 * collections — ``from_collection`` (createDataFrame).
 * RDBMS — ``jdbc_table``: Spark's JDBC source does column pruning and
   predicate pushdown server-side, the same capability as the
@@ -26,6 +32,23 @@ TABLES = ("region", "nation", "customer", "supplier", "part",
           "orders", "lineitem", "events", "documents", "embeddings")
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+# Session confs that change how parquet types map to Spark types: a
+# schema inferred under one setting is wrong under another.
+_SCHEMA_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    _NANOS_AS_LONG,
+    "spark.sql.caseSensitive",
+)
+
+# absolute table path -> ((file fingerprint, schema confs),
+#                         (schema, nanos columns, NTZ columns))
+_RECIPES: dict[str, tuple] = {}
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -49,28 +72,85 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
       scoped to columns whose parquet footer actually declares
       TIMESTAMP(NANOS) (checked via pyarrow) — a genuine bigint column
       that merely shares the name ``ts`` is left untouched.
-    """
-    from ..helpers import ensure_event_time
 
+    Parquet schema inference runs one Spark job per read, so the
+    recipe derived here — the inferred schema plus the nanos and NTZ
+    columns to convert — is cached per absolute path.  The key is a
+    fingerprint of every file under the path (relative name, size,
+    ``mtime_ns``; hive-partition subdirectories included) and the
+    session values of the confs in ``_SCHEMA_CONFS``.  A warm load
+    reads with the cached schema and runs no Spark job; a changed file
+    or conf replaces the path's one entry.  A path ``os.stat`` cannot
+    see (``s3a://``, ``hdfs://``) is never cached and is inferred on
+    every call.
+    """
     path = os.path.join(sf_dir, f"{name}.parquet")
+    files = _fingerprint(path)
+    if files is not None:
+        path = os.path.abspath(path)
+        confs = _schema_confs(spark)
+        hit = _RECIPES.get(path)
+        if hit is not None and hit[0] == (files, confs):
+            schema, nanos_cols, ntz_cols = hit[1]
+            df = spark.read.schema(schema).parquet(path)
+            return _convert_timestamps(df, nanos_cols, ntz_cols)
     try:
         df = spark.read.parquet(path)
     except Exception as e:  # AnalysisException: PARQUET_TYPE_ILLEGAL
         if "PARQUET_TYPE_ILLEGAL" not in str(e):
             raise
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        spark.conf.set(_NANOS_AS_LONG, "true")
         df = spark.read.parquet(path)
-    nanos_as_long = (
-        spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
-        == "true")
-    if nanos_as_long:
-        nanos_cols = _parquet_nanos_cols(path)
-        for f in df.schema.fields:
-            if f.name in nanos_cols and f.dataType.simpleString() == "bigint":
-                from pyspark.sql import functions as F
-                df = df.withColumn(
-                    f.name, F.expr(f"timestamp_micros({f.name} div 1000)"))
-    return ensure_event_time(df)
+        if files is not None:
+            confs = _schema_confs(spark)   # the recipe is for the new value
+    from pyspark.sql import types as T
+    schema = df.schema
+    nanos_cols = ()
+    if spark.conf.get(_NANOS_AS_LONG, "false") == "true":
+        footer_nanos = _parquet_nanos_cols(path)
+        nanos_cols = tuple(f.name for f in schema.fields
+                           if f.name in footer_nanos
+                           and f.dataType.simpleString() == "bigint")
+    ntz_cols = tuple(f.name for f in schema.fields
+                     if isinstance(f.dataType, T.TimestampNTZType))
+    if files is not None:
+        _RECIPES[path] = ((files, confs), (schema, nanos_cols, ntz_cols))
+    return _convert_timestamps(df, nanos_cols, ntz_cols)
+
+
+def _convert_timestamps(df: DataFrame, nanos_cols, ntz_cols) -> DataFrame:
+    """Nanos-since-epoch longs → microsecond timestamps, and NTZ →
+    TimestampType (a relabeling under the pinned UTC session zone)."""
+    if not (nanos_cols or ntz_cols):
+        return df
+    from pyspark.sql import functions as F
+    cols = {c: F.expr(f"timestamp_micros({c} div 1000)") for c in nanos_cols}
+    cols.update({c: F.col(c).cast("timestamp") for c in ntz_cols})
+    return df.withColumns(cols)
+
+
+def _schema_confs(spark: SparkSession) -> tuple:
+    # one get per key: spark.conf.getAll costs ~150x more
+    return tuple(spark.conf.get(k) for k in _SCHEMA_CONFS)
+
+
+def _fingerprint(path: str) -> tuple | None:
+    """(relative name, size, mtime_ns) of every file under ``path``,
+    or None when ``os.stat`` cannot see it (a remote URI)."""
+    try:
+        if not os.path.isdir(path):
+            st = os.stat(path)
+            return ((".", st.st_size, st.st_mtime_ns),)
+        out = []
+        for root, _, names in os.walk(path):
+            for n in names:
+                f = os.path.join(root, n)
+                st = os.stat(f)
+                out.append((os.path.relpath(f, path), st.st_size,
+                            st.st_mtime_ns))
+        return tuple(sorted(out))
+    except OSError:
+        return None
 
 
 def _parquet_nanos_cols(path: str) -> set[str]:

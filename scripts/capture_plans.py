@@ -9,6 +9,11 @@ The --checkout path's pythonql_spark package is imported (sys.modules
 purged first), so "before" plans come from a baseline git worktree and
 "after" plans from the live repo — the same two-checkout pattern as
 scripts/ab_interleave.py.  One Spark session serves both.
+
+--executed runs each key's plan first, so the formatted plan is the
+AQE-final one, and prepends the optimized logical plan.  A key listed
+twice is captured twice; the second capture overwrites the first, so
+it shows the plan a warm session builds.
 """
 
 from __future__ import annotations
@@ -36,6 +41,7 @@ def load_queries(path: str):
 def main() -> None:
     keys = [a for a in sys.argv[1:] if not a.startswith("--")]
     checkout, suffix, out_dir = REPO, "after", "plans/r11"
+    executed = "--executed" in sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     for a in sys.argv[1:]:
         if a.startswith("--checkout="):
@@ -66,7 +72,15 @@ def main() -> None:
         t0 = time.perf_counter()
         try:
             df = queries[k](spark, sf_dir)
-            text = df._jdf.queryExecution().explainString(mode)
+            qe = df._jdf.queryExecution()
+            if executed:
+                # run the frame's own adaptive plan to its final form,
+                # counting rows on the JVM side
+                qe.executedPlan().execute().count()
+                text = ("== Optimized Logical Plan ==\n"
+                        f"{qe.optimizedPlan()}\n{qe.explainString(mode)}")
+            else:
+                text = qe.explainString(mode)
         except Exception as e:
             text = f"PLAN CAPTURE FAILED: {type(e).__name__}: {e}"
         p = out / f"{k}_{suffix}.txt"

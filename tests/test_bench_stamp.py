@@ -113,6 +113,47 @@ def test_mid_run_retime_gate():
                          mid_retimes_s=[0.61, 0.70]) is True
 
 
+def test_retime_hard_floor():
+    """The band is high-side only, but a retime far below any warm
+    reading means the run timed a wrong or empty dataset."""
+    b = _bench()
+    clean = dict(probe_pre_s=0.47, probe_post_s=0.48,
+                 ref_retime_s=0.25, loadavg1_pre=0.8, sf=0.1,
+                 ref_retime_pre_s=0.24)
+    assert b.clean_stamp(**{**clean, "ref_retime_s": 0.02}) is False
+    assert b.clean_stamp(**{**clean, "ref_retime_pre_s": 0.01}) is False
+    assert b.clean_stamp(**clean, mid_retimes_s=[0.24, 0.03]) is False
+    # deep-warm readings well above the floor still stamp clean
+    assert b.clean_stamp(**clean, mid_retimes_s=[0.16, 0.17]) is True
+
+
+class _Frame:
+    def count(self):
+        return 1
+
+
+def test_failed_mid_retime_leaves_a_gap_marker():
+    """A ref-key failure mid-run is recorded as a None sample, not
+    dropped, so the stamp sees the gap."""
+    b = _bench()
+    calls = {"ref": 0}
+
+    def ref(spark, sf_dir):
+        calls["ref"] += 1
+        if calls["ref"] > 6:        # the first mid retime (1 warm + 5) passes
+            raise RuntimeError("ref key broke mid-run")
+        return _Frame()
+
+    queries = {"ref": ref, **{f"k{i}": (lambda s, d: _Frame())
+                               for i in range(2 * b.MID_RETIME_EVERY + 1)}}
+    headline = [k for k in queries if k != "ref"]
+    times, failed, mids, _ = b.run_headline(None, queries, headline,
+                                            "sf", "ref")
+    assert len(times) == len(headline) and not failed
+    # clean_stamp fails a None mid sample (test_mid_run_retime_gate)
+    assert len(mids) == 2 and mids[0] is not None and mids[1] is None
+
+
 def test_probe_measures_host_not_spark():
     """The probe must run in-band (~0.5 s idle) and return seconds;
     a smoke bound wide enough to never flake under suite load."""

@@ -244,6 +244,136 @@ def test_genuine_bigint_ts_not_corrupted_by_nanos_fallback(spark, tmp_path):
     assert sorted(r.ts for r in doc.select("ts").collect()) == longs
 
 
+# ------------------------------------------------- load_table cache
+
+def _load_jobs(spark, sf_dir, name):
+    """(DataFrame, Spark jobs launched) for one load_table call."""
+    import uuid
+
+    from pythonql_spark.sources import load_table
+    sc = spark.sparkContext
+    group = f"load_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, f"load_table {name}")
+    try:
+        df = load_table(spark, str(sf_dir), name)
+        # the status tracker is fed by the async listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return df, len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setJobGroup("", "")
+
+
+def _write(path, **cols):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    path.parent.mkdir(parents=True, exist_ok=True)
+    pq.write_table(pa.table(cols), path)
+
+
+def test_load_table_warm_runs_no_job(spark, tmp_path):
+    """Schema inference is a Spark job; a warm load reuses the cached
+    recipe (NTZ column included) and runs none, with the same schema
+    and rows as the cold load."""
+    import datetime as dt
+
+    import pyarrow as pa
+    ts = [dt.datetime(2024, 5, 1, h) for h in range(3)]
+    _write(tmp_path / "events.parquet",
+           event_id=pa.array([1, 2, 3], pa.int64()),
+           ts=pa.array(ts, pa.timestamp("us")))
+    cold, cold_jobs = _load_jobs(spark, tmp_path, "events")
+    warm, warm_jobs = _load_jobs(spark, tmp_path, "events")
+    assert cold_jobs >= 1 and warm_jobs == 0
+    assert warm.schema == cold.schema
+    assert dict(warm.dtypes)["ts"] == "timestamp"
+    assert sorted(warm.collect()) == sorted(cold.collect())
+    assert sorted(r.ts for r in warm.collect()) == ts
+
+
+def test_load_table_overwrite_returns_new_schema(spark, tmp_path):
+    path = str(tmp_path / "t.parquet")
+    spark.createDataFrame([(1, "x")], "a long, b string") \
+        .write.mode("overwrite").parquet(path)
+    first, _ = _load_jobs(spark, tmp_path, "t")
+    assert first.columns == ["a", "b"]
+    spark.createDataFrame([(2, 2.5)], "a long, c double") \
+        .write.mode("overwrite").parquet(path)
+    again, _ = _load_jobs(spark, tmp_path, "t")
+    assert again.columns == ["a", "c"]
+    assert [tuple(r) for r in again.collect()] == [(2, 2.5)]
+
+
+def test_load_table_new_partition_file_invalidates(spark, tmp_path):
+    """The fingerprint walks hive-partition subdirectories: a file
+    added under a new ``p=`` directory re-infers, so the partition
+    column's type follows the new value instead of the cached int."""
+    import pyarrow as pa
+    _write(tmp_path / "t.parquet" / "p=1" / "part-0.parquet",
+           v=pa.array([1], pa.int64()))
+    first, _ = _load_jobs(spark, tmp_path, "t")
+    assert dict(first.dtypes)["p"] == "int"
+    _write(tmp_path / "t.parquet" / "p=x" / "part-0.parquet",
+           v=pa.array([2], pa.int64()))
+    again, jobs = _load_jobs(spark, tmp_path, "t")
+    assert jobs >= 1
+    assert dict(again.dtypes)["p"] == "string"
+    assert sorted((r.v, r.p) for r in again.collect()) == [(1, "1"), (2, "x")]
+
+
+def test_load_table_conf_flip_reinfers(spark, tmp_path):
+    import pyarrow as pa
+    _write(tmp_path / "b.parquet", k=pa.array([1], pa.int64()),
+           raw=pa.array([b"hi"], pa.binary()))
+    assert dict(_load_jobs(spark, tmp_path, "b")[0].dtypes)["raw"] == "binary"
+    key = "spark.sql.parquet.binaryAsString"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try:
+        df, jobs = _load_jobs(spark, tmp_path, "b")
+        assert jobs >= 1
+        assert dict(df.dtypes)["raw"] == "string"
+        assert df.first().raw == "hi"
+    finally:
+        spark.conf.set(key, old)
+    assert dict(_load_jobs(spark, tmp_path, "b")[0].dtypes)["raw"] == "binary"
+
+
+def test_load_table_nanos_fallback_is_cached(spark, tmp_path):
+    """A session without nanosAsLong takes the PARQUET_TYPE_ILLEGAL
+    fallback once; the recipe is stored under the flipped conf, so the
+    next load is warm."""
+    import datetime as dt
+
+    import pyarrow as pa
+    base = dt.datetime(2024, 5, 1, 12, 0, 0)
+    _write(tmp_path / "events.parquet", event_id=pa.array([1], pa.int64()),
+           ts=pa.array([base], pa.timestamp("ns")))
+    s = spark.newSession()
+    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+    cold, _ = _load_jobs(s, tmp_path, "events")
+    assert s.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
+    warm, jobs = _load_jobs(s, tmp_path, "events")
+    assert jobs == 0
+    for df in (cold, warm):
+        assert dict(df.dtypes)["ts"] == "timestamp"
+        assert [r.ts for r in df.collect()] == [base]
+
+
+def test_load_table_unstattable_path_not_cached(spark, tmp_path):
+    """A path os.stat cannot see (here a ``file:`` URI; in production
+    ``s3a://`` or ``hdfs://``) is inferred on every call, never cached."""
+    import pyarrow as pa
+
+    from pythonql_spark.sources import catalog
+    _write(tmp_path / "u.parquet", k=pa.array([1, 2], pa.int64()))
+    uri = f"file://{tmp_path}"
+    for _ in range(2):
+        df, jobs = _load_jobs(spark, uri, "u")
+        assert jobs >= 1
+        assert sorted(r.k for r in df.collect()) == [1, 2]
+    assert not any(str(tmp_path) in p for p in catalog._RECIPES)
+
+
 # ------------------------------------------------------- merge_upsert
 
 def test_merge_upsert_unpartitioned(spark, tmp_path):
