@@ -1682,8 +1682,9 @@ def _register_sketch_md5_oracles():
     from pythonql_spark.operators.sketch import (
         cms_counters_md5_sql, hll_registers_md5_sql,
         sample_quantiles_md5_sql)
-    from pythonql_spark.operators.sketch import _h60, _hll_rho_sql
-    h = _h60("cast(user_id as varchar)", "duck")
+    from pythonql_spark.operators.sketch import _hll_rho_sql
+    from pythonql_spark.operators.text import md5_prefix_int
+    h = md5_prefix_int("cast(user_id as varchar)", 15, "duck")
     ORACLE["rollup_distinct"] = f"""
 WITH hashed AS (
   SELECT cast(cast(ts as date) as varchar) AS day,
@@ -2070,6 +2071,11 @@ def dedup_corpus(spark, sf):
     return dedup_keep(docs, pairs).select("doc_id", "source", "lang")
 
 
+# the md5 MinHash keys: the production builders on the dual-dialect
+# hash family, at the parameters their generated DuckDB oracles use
+_MD5_MINHASH = {"hash_fn": "md5", "num_hashes": 16, "bands": 8}
+
+
 @q("dedup_corpus_md5", None)  # oracle attached below (generated SQL)
 def dedup_corpus_md5(spark, sf):
     """The ENTIRE production LSH dedup pipeline under one value
@@ -2079,9 +2085,9 @@ def dedup_corpus_md5(spark, sf):
     composition on the xxhash64 production hashes (rows-only); this
     key proves the composition end-to-end against DuckDB's
     recursive-CTE replay."""
-    from pythonql_spark.operators.dedup import dedup_keep, minhash_pairs_md5
+    from pythonql_spark.operators.dedup import dedup_keep, minhash_lsh_pairs
     docs = load_table(spark, sf, "documents")
-    pairs = minhash_pairs_md5(docs)
+    pairs = minhash_lsh_pairs(docs, **_MD5_MINHASH)
     return dedup_keep(docs, pairs).select("doc_id", "lang", "source")
 
 
@@ -2141,11 +2147,12 @@ def dedup_bipartite_md5(spark, sf):
     hashed-shingle Jaccard verify.  The surrounding composition
     (within-batch components + anti-join) is oracled by
     dedup_corpus/dedup_clusters; the xxhash64 production path
-    (`dedup_increment`) shares this plan shape."""
-    from pythonql_spark.operators.dedup import minhash_bipartite_md5
+    (`dedup_increment`) runs the same builder."""
+    from pythonql_spark.operators.dedup import minhash_lsh_pairs_bipartite
     docs = load_table(spark, sf, "documents")
-    return minhash_bipartite_md5(docs.filter("doc_id % 10 = 0"),
-                                 docs.filter("doc_id % 10 != 0"))
+    return minhash_lsh_pairs_bipartite(docs.filter("doc_id % 10 = 0"),
+                                       docs.filter("doc_id % 10 != 0"),
+                                       **_MD5_MINHASH)
 
 
 @q("dedup_minhash_md5", None)  # oracle attached below (generated SQL)
@@ -2155,10 +2162,10 @@ def dedup_minhash_md5(spark, sf):
     prefix, so banded candidate generation, the bucket-size guard AND
     the hashed-shingle Jaccard verify are checked bit-for-bit against
     DuckDB — the xxhash64 production path (`dedup_minhash`, 4× faster)
-    shares the identical plan shape."""
-    from pythonql_spark.operators.dedup import minhash_pairs_md5
+    runs the same builder."""
+    from pythonql_spark.operators.dedup import minhash_lsh_pairs
     docs = load_table(spark, sf, "documents")
-    return minhash_pairs_md5(docs)
+    return minhash_lsh_pairs(docs, **_MD5_MINHASH)
 
 
 @q("dedup_simhash")  # oracle attached below (generated SQL)

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .text import ngram_list
+from .text import md5_prefix_int, ngram_list
 
 from pythonql_spark.helpers import local_rows_df
 
@@ -49,11 +49,9 @@ def position_exprs(expr: str, k: int, n_bits: int,
             continue
         if dialect == "spark":
             s = f"concat('{i}:', cast({expr} as string))"
-            h = f"cast(conv(substring(md5({s}), 1, 15), 16, 10) as bigint)"
         else:
             s = f"'{i}:' || cast({expr} as varchar)"
-            h = f"cast(('0x' || substring(md5({s}), 1, 15)) as bigint)"
-        out.append(f"({h} % {n_bits})")
+        out.append(f"({md5_prefix_int(s, 15, dialect)} % {n_bits})")
     return out
 
 

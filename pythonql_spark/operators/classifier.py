@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from pythonql_spark.helpers import local_rows_df
 
-from .text import _ws
+from .text import _ws, md5_prefix_int
 
 
 def bucket_expr(var: str, n_buckets: int, dialect: str = "spark",
@@ -42,11 +42,7 @@ def bucket_expr(var: str, n_buckets: int, dialect: str = "spark",
         if dialect != "spark":
             raise ValueError("xxhash64 buckets are Spark-only")
         return f"pmod(xxhash64({var}), {n_buckets})"
-    if dialect == "spark":
-        h = f"cast(conv(substring(md5({var}), 1, 15), 16, 10) as bigint)"
-    else:
-        h = f"cast(('0x' || substring(md5({var}), 1, 15)) as bigint)"
-    return f"({h} % {n_buckets})"
+    return f"({md5_prefix_int(var, 15, dialect)} % {n_buckets})"
 
 
 def _words(col: str) -> str:
@@ -381,8 +377,8 @@ def quality_score_md5_oracle_sql(*, text_col: str = "text",
     literal), mean-over-words + bias, 6-dp round (which absorbs the
     sum-order ULP difference exactly as the cosine oracles do)."""
     b = bucket_expr("w", n_buckets, "duck")
-    wexpr = (f"((cast(('0x' || substring(md5(cast({b} as varchar))"
-             f", 1, 8)) as bigint) % 2001) - 1000) / 1000.0")
+    wh = md5_prefix_int(f"cast({b} as varchar)", 8, "duck")
+    wexpr = f"(({wh} % 2001) - 1000) / 1000.0"
     return f"""
 WITH sp AS (
   SELECT {id_col},

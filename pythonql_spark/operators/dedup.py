@@ -6,11 +6,24 @@ optional exact-similarity verify pass on candidates only.
 * exact_dedup        — hash-groupBy keep-first (one shuffle)
 * minhash_lsh_pairs  — word-shingle MinHash signatures → banded LSH
                        bucket join → Jaccard verify (all JVM-side:
-                       xxhash64 + higher-order array functions)
+                       higher-order array functions); the bipartite
+                       form pairs a new batch against a corpus
 * simhash_pairs      — 64-bit SimHash → band bucket join → hamming
                        verify via bit_count(xor)
 * ngram_jaccard_pairs— exact n-gram Jaccard over a bounded candidate
                        join (same-key blocking)
+
+The MinHash and SimHash operators take ``hash_fn``, which picks the
+hash family and nothing else — the plan shape is the same for both:
+
+* ``"xxhash64"`` (default) — the cheapest JVM hash; 64-bit SimHash.
+* ``"md5"``      — every hash is the 60-bit dual-dialect md5 prefix
+                   (:func:`pythonql_spark.operators.text.md5_prefix_int`)
+                   of a deterministic string, so the whole pipeline is
+                   reproducible bit-for-bit in DuckDB
+                   (``minhash_pairs_oracle_sql``,
+                   ``minhash_bipartite_oracle_sql``,
+                   ``simhash_pairs_oracle_sql``); 60-bit SimHash.
 """
 
 from __future__ import annotations
@@ -18,19 +31,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pythonql_spark.operators.text import fingerprint
+from pythonql_spark.operators.text import fingerprint, md5_prefix_int
 
 from pythonql_spark.helpers import local_rows_df
-
-
-def _fan_out_small(df: DataFrame, full: bool = False) -> DataFrame:
-    """Fan out a small-file input before the expensive map side — the
-    shingle/hash/explode chains below otherwise run in the SCAN stage
-    at the input's split count (serial for a single small file).  See
-    :func:`pythonql_spark.sources.catalog.fan_out_small` for the
-    width policy."""
-    from pythonql_spark.sources.catalog import fan_out_small
-    return fan_out_small(df, full=full)
+from pythonql_spark.sources.catalog import fan_out_small
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text",
@@ -169,9 +173,12 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
                       num_hashes: int = 64, bands: int = 16,
                       ngram: int = 3,
                       jaccard_threshold: float | None = 0.5,
-                      max_bucket_size: int = 500) -> DataFrame:
+                      max_bucket_size: int = 500,
+                      hash_fn: str = "xxhash64") -> DataFrame:
     """Near-duplicate candidate pairs (id_a < id_b) via banded MinHash
-    LSH, optionally verified with exact n-gram Jaccard.
+    LSH, optionally verified with exact n-gram Jaccard.  ``hash_fn``
+    picks the hash family (see the module docstring); ``"md5"`` is
+    mirrored by :func:`minhash_pairs_oracle_sql`.
 
     Plan shape: scan → explode shingles → hash each shingle ONCE →
     groupBy(id) with num_hashes codegen'd min-aggregates (map-side
@@ -193,9 +200,13 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
     so mass-duplicated content still fully clusters; use
     :func:`minhash_bucket_report` to see which buckets the cap
     demoted."""
-    df = _fan_out_small(df)
+    # fan out a small-file input: the shingle/hash/explode head would
+    # otherwise run at the scan's split count (serial for one small
+    # file).  One fan-out covers the signature head and both
+    # jaccard-verify gram builds.
+    df = fan_out_small(df)
     buckets = _minhash_band_buckets(df, id_col, text_col,
-                                    num_hashes, bands, ngram)
+                                    num_hashes, bands, ngram, hash_fn)
     pairs = _bucket_pairs(
         buckets, ["band", "h"], max_bucket_size,
         elem_struct="id",
@@ -203,22 +214,35 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
     if jaccard_threshold is None:
         return pairs
     return _jaccard_verify(pairs, df, df, id_col, text_col, ngram,
-                           jaccard_threshold)
+                           jaccard_threshold, hash_fn)
 
 
-def _gh_list(text_col: str, ngram: int) -> str:
+def _gh_list(text_col: str, ngram: int,
+             hash_fn: str = "xxhash64") -> str:
     """Shingle hashes without building shingle STRINGS: hash each word
-    once, then a shingle hash is xxhash64 over n consecutive word
-    hashes (longs).  The outer single-element transform(array(..))
-    binds the word-hash array ONCE as a lambda variable — without it,
-    projection collapse re-inlines the split+hash pass into every
-    element_at (the HOF re-evaluation trap; ~8× slower)."""
-    wh = f"transform(split(trim(lower({text_col})), '\\\\s+'), w -> xxhash64(w))"
-    idx = ", ".join(
-        f"element_at(ws, least(i + {j}, size(ws)))" for j in range(ngram))
+    once, then a shingle hash is a hash over n consecutive word hashes
+    — xxhash64 over the longs, or (``hash_fn="md5"``) the md5 prefix
+    of their ':'-joined decimal strings, mirrored by
+    :func:`_gh_list_md5_duck`.  The outer single-element
+    transform(array(..)) binds the word-hash array ONCE as a lambda
+    variable — without it, projection collapse re-inlines the
+    split+hash pass into every element_at (the HOF re-evaluation
+    trap; ~8× slower)."""
+    elems = [f"element_at(ws, least(i + {j}, size(ws)))"
+             for j in range(ngram)]
+    if hash_fn == "md5":
+        word_h = md5_prefix_int("w", 15, "spark")
+        parts = ", ".join(f"cast({e} as string)" for e in elems)
+        shingle_h = md5_prefix_int(f"concat_ws(':', {parts})", 15, "spark")
+    elif hash_fn == "xxhash64":
+        word_h = "xxhash64(w)"
+        shingle_h = f"xxhash64({', '.join(elems)})"
+    else:
+        raise ValueError(f"hash_fn must be xxhash64|md5, got {hash_fn!r}")
+    wh = f"transform(split(trim(lower({text_col})), '\\\\s+'), w -> {word_h})"
     return (f"transform(array({wh}), ws -> "
             f"transform(sequence(1, greatest(size(ws) - {ngram - 1}, 1)), "
-            f"i -> xxhash64({idx})))[0]")
+            f"i -> {shingle_h}))[0]")
 
 
 def _check_bands(num_hashes: int, bands: int) -> None:
@@ -234,23 +258,41 @@ def _check_bands(num_hashes: int, bands: int) -> None:
 
 def _minhash_band_buckets(df: DataFrame, id_col: str, text_col: str,
                           num_hashes: int, bands: int,
-                          ngram: int) -> DataFrame:
+                          ngram: int,
+                          hash_fn: str = "xxhash64") -> DataFrame:
     """(id, band, h): banded MinHash bucket keys per doc — explode
     shingles, hash once, num_hashes codegen'd min-aggregates (map-side
-    partial agg: the shuffle carries id → 64 longs, not text)."""
+    partial agg: the shuffle carries id → 64 longs, not text).  The
+    seeded min-hash and band hash are xxhash64 with a seed, or md5
+    prefixes of '{seed}#{gh}' and of the ','-joined band mins."""
     _check_bands(num_hashes, bands)
     r = num_hashes // bands
     shingles = (df.select(F.col(id_col).alias("id"),
-                          F.explode(F.expr(_gh_list(text_col, ngram)))
+                          F.explode(F.expr(_gh_list(text_col, ngram,
+                                                    hash_fn)))
                            .alias("gh")))
+    if hash_fn == "md5":
+        def seeded(i: int) -> str:
+            return md5_prefix_int(f"concat('{i}#', cast(gh as string))",
+                                  15, "spark")
+
+        def band_h(ms: list[str]) -> str:
+            return md5_prefix_int(
+                "concat_ws(',', " + ", ".join(
+                    f"cast({m} as string)" for m in ms) + ")", 15, "spark")
+    else:
+        def seeded(i: int) -> str:
+            return f"xxhash64(gh, {i})"
+
+        def band_h(ms: list[str]) -> str:
+            return "xxhash64(" + ", ".join(ms) + ", 777)"
     sig = shingles.groupBy("id").agg(
-        *[F.min(F.expr(f"xxhash64(gh, {i})")).alias(f"m{i}")
+        *[F.min(F.expr(seeded(i))).alias(f"m{i}")
           for i in range(num_hashes)])
     band_arr = F.array(*[
         F.struct(F.lit(b).alias("band"),
-                 F.expr("xxhash64(" +
-                        ", ".join(f"m{b * r + j}" for j in range(r)) +
-                        ", 777)").alias("h"))
+                 F.expr(band_h([f"m{b * r + j}" for j in range(r)]))
+                 .alias("h"))
         for b in range(bands)])
     return (sig.select("id", F.explode(band_arr).alias("bk"))
             .select("id", "bk.band", "bk.h"))
@@ -258,14 +300,13 @@ def _minhash_band_buckets(df: DataFrame, id_col: str, text_col: str,
 
 def _jaccard_verify(pairs: DataFrame, df_a: DataFrame, df_b: DataFrame,
                     id_col: str, text_col: str, ngram: int,
-                    threshold: float, gh: str | None = None) -> DataFrame:
+                    threshold: float,
+                    hash_fn: str = "xxhash64") -> DataFrame:
     """Exact-Jaccard verify pass on candidates only, over the HASHED
     shingle sets (set intersection is hash-collision-insensitive at
-    64 bits, and longs skip rebuilding shingle strings).  ``gh``
-    overrides the shingle-hash expression (the md5 dual-dialect paths
-    pass theirs) — ONE copy of the join/intersect/union/round block
-    keeps production and oracle paths in sync."""
-    grams = F.expr(f"array_distinct({gh or _gh_list(text_col, ngram)})")
+    60-64 bits, and longs skip rebuilding shingle strings)."""
+    grams = F.expr(
+        f"array_distinct({_gh_list(text_col, ngram, hash_fn)})")
     a = df_a.select(F.col(id_col).alias("id_a"), grams.alias("grams_a"))
     b = df_b.select(F.col(id_col).alias("id_b"), grams.alias("grams_b"))
     return (pairs.join(a, "id_a").join(b, "id_b")
@@ -297,11 +338,13 @@ def minhash_lsh_pairs_bipartite(new: DataFrame, corpus: DataFrame,
                                 num_hashes: int = 64, bands: int = 16,
                                 ngram: int = 3,
                                 jaccard_threshold: float | None = 0.5,
-                                max_bucket_size: int = 500) -> DataFrame:
+                                max_bucket_size: int = 500,
+                                hash_fn: str = "xxhash64") -> DataFrame:
     """Cross-corpus near-dup pairs (id_a from ``new``, id_b from
     ``corpus``): the incremental-ingest primitive — a day's batch is
     checked against the accumulated corpus without ever re-pairing
-    the corpus with itself.
+    the corpus with itself.  ``hash_fn="md5"`` is mirrored by
+    :func:`minhash_bipartite_oracle_sql`.
 
     The corpus side groups into capped bucket arrays (ONE shuffle of
     id+band keys, never text); the new side — typically orders of
@@ -313,10 +356,13 @@ def minhash_lsh_pairs_bipartite(new: DataFrame, corpus: DataFrame,
     new doc a duplicate of the corpus?" question, matching ANY
     representative of a mass-duplicated cluster suffices, and the
     probe cost stays bounded."""
+    # the signature heads are the heavy map work on both sides, and
+    # both exchange right after (see minhash_lsh_pairs)
+    new, corpus = fan_out_small(new), fan_out_small(corpus)
     nb = _minhash_band_buckets(new, id_col, text_col,
-                               num_hashes, bands, ngram)
+                               num_hashes, bands, ngram, hash_fn)
     cb = _minhash_band_buckets(corpus, id_col, text_col,
-                               num_hashes, bands, ngram)
+                               num_hashes, bands, ngram, hash_fn)
     grouped = _capped_corpus_buckets(cb, max_bucket_size)
     pairs = (nb.join(grouped, ["band", "h"])
              .select(F.col("id").alias("id_a"),
@@ -325,7 +371,7 @@ def minhash_lsh_pairs_bipartite(new: DataFrame, corpus: DataFrame,
     if jaccard_threshold is None:
         return pairs
     return _jaccard_verify(pairs, new, corpus, id_col, text_col, ngram,
-                           jaccard_threshold)
+                           jaccard_threshold, hash_fn)
 
 
 def build_minhash_index(corpus: DataFrame, table: str,
@@ -407,8 +453,7 @@ def simhash_df(df: DataFrame, id_col: str = "doc_id",
     cheap production default."""
     if hash_fn == "md5":
         bits = min(bits, 60)
-        wexpr = ("cast(conv(substring(md5(w), 1, 15), 16, 10) "
-                 "as bigint)")
+        wexpr = md5_prefix_int("w", 15, "spark")
     else:
         wexpr = "xxhash64(w)"
     words = (df.select(F.col(id_col).alias("id"),
@@ -436,7 +481,7 @@ def simhash_pairs(df: DataFrame, id_col: str = "doc_id",
     ``max_bucket_size`` guards degenerate buckets (see
     minhash_lsh_pairs).  ``hash_fn="md5"`` is the 60-bit
     oracle-portable path (4×15-bit bands by default)."""
-    df = _fan_out_small(df)
+    df = fan_out_small(df)
     banded = _simhash_band_buckets(df, id_col, text_col, band_bits,
                                    hash_fn)
     return (_bucket_pairs(
@@ -585,7 +630,7 @@ def ngram_jaccard_pairs(df: DataFrame, block_cols: list[str],
     # full width: the per-pair intersect/union work rides these
     # partitions through a broadcast self-join (no exchange re-spreads
     # it), and it is orders of magnitude heavier than the gram build
-    df = _fan_out_small(df, full=True)
+    df = fan_out_small(df, full=True)
     grams = F.expr(f"array_sort(array_distinct({word_ngrams(text_col, ngram)}))")
     side = df.select(F.col(id_col).alias("id"), grams.alias("grams"),
                      *[F.col(c) for c in block_cols])
@@ -624,7 +669,7 @@ WITH words AS (
          unnest(list_distinct(str_split_regex(trim(lower({text_col})),
                                               '\\s+'))) AS w
   FROM {table}),
-wh AS (SELECT id, cast(('0x' || substring(md5(w), 1, 15)) as bigint) AS wh
+wh AS (SELECT id, {md5_prefix_int("w", 15, "duck")} AS wh
        FROM words),
 perbit AS (SELECT id, {sums} FROM wh GROUP BY id),
 sh AS (SELECT id, cast({sh} as bigint) AS sh FROM perbit),
@@ -651,71 +696,45 @@ pairs AS (
 SELECT id_a, id_b, hamming FROM pairs WHERE hamming <= {max_hamming}"""
 
 
-# ---------------------------------------------- md5 (oracle) MinHash path
-
-def _h60(arg: str, dialect: str) -> str:
-    """60-bit dual-dialect hash of a STRING expression."""
-    if dialect == "spark":
-        return (f"cast(conv(substring(md5({arg}), 1, 15), 16, 10) "
-                "as bigint)")
-    return f"cast(('0x' || substring(md5({arg}), 1, 15)) as bigint)"
-
-
-def minhash_pairs_md5(df: DataFrame, id_col: str = "doc_id",
-                      text_col: str = "text", *,
-                      num_hashes: int = 16, bands: int = 8,
-                      ngram: int = 3,
-                      jaccard_threshold: float | None = 0.5,
-                      max_bucket_size: int = 500) -> DataFrame:
-    """MinHash-LSH pairs on the dual-dialect md5 path: every hash in
-    the pipeline (word, shingle, seeded min, band) is the 60-bit md5
-    prefix of a deterministic string, so the ENTIRE pipeline — banded
-    candidate generation, bucket-size guard, exact hashed-shingle
-    Jaccard verify — is reproducible bit-for-bit in DuckDB
-    (`minhash_pairs_oracle_sql`).  Same plan shape as the xxhash64
-    production path: explode → hash once → num_hashes codegen'd min
-    aggregates → one (band, h) shuffle → in-bucket pairs."""
-    # same fan-out as the xxhash64 path (minhash_lsh_pairs) — the md5
-    # head is ~16 md5-min aggregates per shingle, far heavier, and it
-    # ran on the scan's split count (profiled 8.7 s exec ≈ wall at
-    # sf0.1: serial).  One fan-out covers all three heavy consumers
-    # (signature head + both jaccard-verify gram builds).
-    df = _fan_out_small(df)
-    gh = _gh_list_md5_spark(text_col, ngram)
-    buckets = _md5_band_buckets(df, id_col, text_col,
-                                num_hashes, bands, ngram)
-    pairs = _bucket_pairs(
-        buckets, ["band", "h"], max_bucket_size,
-        elem_struct="id",
-        pair_expr="struct(xs[i] as id_a, xs[j] as id_b)").distinct()
-    if jaccard_threshold is None:
-        return pairs
-    return _jaccard_verify(pairs, df, df, id_col, text_col, ngram,
-                           jaccard_threshold, gh=gh)
-
-
-def _gh_list_md5_spark(text_col: str, ngram: int) -> str:
-    wh = (f"transform(split(trim(lower({text_col})), '\\\\s+'), "
-          f"w -> {_h60('w', 'spark')})")
-    parts = ", ".join(
-        f"cast(element_at(ws, least(i + {j}, size(ws))) as string)"
-        for j in range(ngram))
-    inner = _h60(f"concat_ws(':', {parts})", "spark")
-    return (f"transform(array({wh}), ws -> "
-            f"transform(sequence(1, greatest(size(ws) - {ngram - 1}, 1)), "
-            f"i -> {inner}))[0]")
-
+# ------------------------------- DuckDB mirrors of the md5 MinHash path
 
 def _gh_list_md5_duck(text_col: str, ngram: int) -> str:
+    """DuckDB mirror of ``_gh_list(..., hash_fn="md5")``."""
     wh = (f"list_transform(str_split_regex(trim(lower({text_col})), "
-          f"'\\s+'), w -> {_h60('w', 'duck')})")
+          f"'\\s+'), w -> {md5_prefix_int('w', 15, 'duck')})")
     parts = " || ':' || ".join(
         f"cast(ws[least(i + {j}, len(ws))] as varchar)"
         for j in range(ngram))
-    inner = _h60(f"({parts})", "duck")
+    inner = md5_prefix_int(f"({parts})", 15, "duck")
     return (f"(SELECT list_transform(range(1, greatest(len(ws) - "
             f"{ngram - 1}, 1) + 1), i -> {inner}) "
             f"FROM (SELECT {wh} AS ws) __t)")
+
+
+def _minhash_oracle_parts(text_col: str, num_hashes: int, bands: int,
+                          ngram: int) -> tuple[str, str, str, str]:
+    """(gh, mins, bandsel, jac): the DuckDB shingle-hash list, seeded
+    min aggregates, band structs and Jaccard expression that both
+    md5 MinHash oracles share (mirrors :func:`_gh_list`,
+    :func:`_minhash_band_buckets` and :func:`_jaccard_verify`)."""
+    _check_bands(num_hashes, bands)
+    r = num_hashes // bands
+    gh = _gh_list_md5_duck(text_col, ngram)
+    mins = ", ".join(
+        "min(" + md5_prefix_int(f"(cast({i} as varchar) || '#' || "
+                                f"cast(gh as varchar))", 15, "duck")
+        + f") AS m{i}"
+        for i in range(num_hashes))
+    bandsel = ", ".join(
+        f"struct_pack(band := {b}, h := " + md5_prefix_int(
+            "(" + " || ',' || ".join(
+                f"cast(m{b * r + j} as varchar)" for j in range(r))
+            + ")", 15, "duck") + ")"
+        for b in range(bands))
+    jac = ("cast(len(list_filter(a.grams, x -> list_contains(b.grams, x))) as double) / "
+           "cast(len(a.grams) + len(b.grams) "
+           "- len(list_filter(a.grams, x -> list_contains(b.grams, x))) as double)")
+    return gh, mins, bandsel, jac
 
 
 def minhash_pairs_oracle_sql(*, id_col: str = "doc_id",
@@ -725,23 +744,9 @@ def minhash_pairs_oracle_sql(*, id_col: str = "doc_id",
                              jaccard_threshold: float = 0.5,
                              max_bucket_size: int = 500,
                              table: str = "documents") -> str:
-    """DuckDB mirror of :func:`minhash_pairs_md5`."""
-    _check_bands(num_hashes, bands)
-    r = num_hashes // bands
-    gh = _gh_list_md5_duck(text_col, ngram)
-    mins = ", ".join(
-        "min(" + _h60(f"(cast({i} as varchar) || '#' || "
-                      f"cast(gh as varchar))", "duck") + f") AS m{i}"
-        for i in range(num_hashes))
-    bandsel = ", ".join(
-        f"struct_pack(band := {b}, h := " + _h60(
-            "(" + " || ',' || ".join(
-                f"cast(m{b * r + j} as varchar)" for j in range(r))
-            + ")", "duck") + ")"
-        for b in range(bands))
-    jac = ("cast(len(list_filter(a.grams, x -> list_contains(b.grams, x))) as double) / "
-           "cast(len(a.grams) + len(b.grams) "
-           "- len(list_filter(a.grams, x -> list_contains(b.grams, x))) as double)")
+    """DuckDB mirror of ``minhash_lsh_pairs(hash_fn="md5")``."""
+    gh, mins, bandsel, jac = _minhash_oracle_parts(
+        text_col, num_hashes, bands, ngram)
     return f"""
 WITH gl AS (SELECT {id_col} AS id, {gh} AS ghs FROM {table}),
 sh AS (SELECT id, unnest(ghs) AS gh FROM gl),
@@ -769,62 +774,6 @@ FROM cand c JOIN side a ON a.id = c.id_a JOIN side b ON b.id = c.id_b
 WHERE {jac} >= {jaccard_threshold}"""
 
 
-def _md5_band_buckets(df: DataFrame, id_col: str, text_col: str,
-                      num_hashes: int, bands: int,
-                      ngram: int) -> DataFrame:
-    """(id, band, h) on the dual-dialect md5 path (the
-    minhash_pairs_md5 signature pipeline, shared by the bipartite
-    form)."""
-    _check_bands(num_hashes, bands)
-    r = num_hashes // bands
-    gh = _gh_list_md5_spark(text_col, ngram)
-    shingles = (df.select(F.col(id_col).alias("id"),
-                          F.explode(F.expr(gh)).alias("gh")))
-    sig = shingles.groupBy("id").agg(
-        *[F.min(F.expr(_h60(f"concat('{i}#', cast(gh as string))",
-                            "spark"))).alias(f"m{i}")
-          for i in range(num_hashes)])
-    band_arr = F.array(*[
-        F.struct(F.lit(b).alias("band"),
-                 F.expr(_h60(
-                     "concat_ws(',', " + ", ".join(
-                         f"cast(m{b * r + j} as string)"
-                         for j in range(r)) + ")", "spark")).alias("h"))
-        for b in range(bands)])
-    return (sig.select("id", F.explode(band_arr).alias("bk"))
-            .select("id", "bk.band", "bk.h"))
-
-
-def minhash_bipartite_md5(new: DataFrame, corpus: DataFrame,
-                          id_col: str = "doc_id",
-                          text_col: str = "text", *,
-                          num_hashes: int = 16, bands: int = 8,
-                          ngram: int = 3,
-                          jaccard_threshold: float = 0.5,
-                          max_bucket_size: int = 500) -> DataFrame:
-    """Cross-corpus near-dup pairs on the md5 oracle path — the
-    incremental-ingest primitive under a full DuckDB value oracle
-    (`minhash_bipartite_oracle_sql`).  Same shape as the xxhash64
-    production `minhash_lsh_pairs_bipartite`: corpus buckets capped
-    and grouped once, the (small) new side probes on (band, h)."""
-    # same fan-out rationale as minhash_pairs_md5: the md5 signature
-    # heads are the heavy map work and both sides immediately exchange
-    new = _fan_out_small(new)
-    corpus = _fan_out_small(corpus)
-    nb = _md5_band_buckets(new, id_col, text_col,
-                           num_hashes, bands, ngram)
-    cb = _md5_band_buckets(corpus, id_col, text_col,
-                           num_hashes, bands, ngram)
-    grouped = _capped_corpus_buckets(cb, max_bucket_size)
-    pairs = (nb.join(grouped, ["band", "h"])
-             .select(F.col("id").alias("id_a"),
-                     F.explode("xs").alias("id_b"))
-             .distinct())
-    return _jaccard_verify(pairs, new, corpus, id_col, text_col, ngram,
-                           jaccard_threshold,
-                           gh=_gh_list_md5_spark(text_col, ngram))
-
-
 def minhash_bipartite_oracle_sql(*, new_where: str, corpus_where: str,
                                  id_col: str = "doc_id",
                                  text_col: str = "text",
@@ -833,23 +782,9 @@ def minhash_bipartite_oracle_sql(*, new_where: str, corpus_where: str,
                                  jaccard_threshold: float = 0.5,
                                  max_bucket_size: int = 500,
                                  table: str = "documents") -> str:
-    """DuckDB mirror of :func:`minhash_bipartite_md5`."""
-    _check_bands(num_hashes, bands)
-    r = num_hashes // bands
-    gh = _gh_list_md5_duck(text_col, ngram)
-    mins = ", ".join(
-        "min(" + _h60(f"(cast({i} as varchar) || '#' || "
-                      f"cast(gh as varchar))", "duck") + f") AS m{i}"
-        for i in range(num_hashes))
-    bandsel = ", ".join(
-        f"struct_pack(band := {b}, h := " + _h60(
-            "(" + " || ',' || ".join(
-                f"cast(m{b * r + j} as varchar)" for j in range(r))
-            + ")", "duck") + ")"
-        for b in range(bands))
-    jac = ("cast(len(list_filter(a.grams, x -> list_contains(b.grams, x))) as double) / "
-           "cast(len(a.grams) + len(b.grams) "
-           "- len(list_filter(a.grams, x -> list_contains(b.grams, x))) as double)")
+    """DuckDB mirror of ``minhash_lsh_pairs_bipartite(hash_fn="md5")``."""
+    gh, mins, bandsel, jac = _minhash_oracle_parts(
+        text_col, num_hashes, bands, ngram)
     return f"""
 WITH gl AS (SELECT {id_col} AS id, ({new_where}) AS isnew, {gh} AS ghs
             FROM {table} WHERE ({new_where}) OR ({corpus_where})),

@@ -407,6 +407,33 @@ def _md5_codebook(m: int, K: int, sub: int, seed: int = 13) -> np.ndarray:
     return Wb
 
 
+def _chain_normalize(X: np.ndarray) -> np.ndarray:
+    """Unit-normalize rows with a sequential sum-of-squares chain over
+    the dims — the fixed left-to-right order the SQL norm uses."""
+    q1 = np.zeros(len(X))
+    for i in range(X.shape[1]):
+        q1 += X[:, i] * X[:, i]
+    return X / np.sqrt(q1)[:, None]
+
+
+def _chain_encode(R: np.ndarray, Wb: np.ndarray) -> np.ndarray:
+    """(n, m) int32 codes of ``R`` against the (m, K, sub) codebook:
+    per subspace, the argmin (lowest code on ties) of a sequential
+    squared-distance chain — the order the SQL encode replays."""
+    m, K, sub = Wb.shape
+    codes = np.empty((len(R), m), dtype=np.int32)
+    for s in range(m):
+        D = np.empty((len(R), K))
+        for j in range(K):
+            acc = np.zeros(len(R))
+            for i in range(sub):
+                t = R[:, s * sub + i] - Wb[s, j, i]
+                acc += t * t
+            D[:, j] = acc
+        codes[:, s] = D.argmin(axis=1)
+    return codes
+
+
 def ivfpq_topk_md5(df: DataFrame, query_ids, k: int = 5, *,
                    n_cells: int = 4, n_probe: int = 2, m: int = 8,
                    K: int = 16, dim: int | None = None,
@@ -437,13 +464,6 @@ def ivfpq_topk_md5(df: DataFrame, query_ids, k: int = 5, *,
     C = _ivf_sign_matrix(dim, n_cells, seed_cells) * (1.0 / np.sqrt(dim))
     Wb = _md5_codebook(m, K, sub, seed_code)
 
-    def _normalize(X: np.ndarray) -> np.ndarray:
-        # sequential sum-of-squares chain, matching the SQL norm
-        q1 = np.zeros(len(X))
-        for i in range(dim):
-            q1 += X[:, i] * X[:, i]
-        return X / np.sqrt(q1)[:, None]
-
     def _cell_scores(X: np.ndarray) -> np.ndarray:
         S = np.empty((len(X), n_cells))
         sign = C * np.sqrt(dim)      # back to ±1 chain coefficients
@@ -457,19 +477,6 @@ def ivfpq_topk_md5(df: DataFrame, query_ids, k: int = 5, *,
             S[:, c] = acc
         return S
 
-    def _encode(R: np.ndarray) -> np.ndarray:
-        codes = np.empty((len(R), m), dtype=np.int32)
-        for s in range(m):
-            D = np.empty((len(R), K))
-            for j in range(K):
-                acc = np.zeros(len(R))
-                for i in range(sub):
-                    t = R[:, s * sub + i] - Wb[s, j, i]
-                    acc += t * t
-                D[:, j] = acc
-            codes[:, s] = D.argmin(axis=1)
-        return codes
-
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("struct<cell: int, code: array<int>>")
@@ -479,8 +486,7 @@ def ivfpq_topk_md5(df: DataFrame, query_ids, k: int = 5, *,
                                  "code": pd.Series([], dtype="object")})
         X = np.vstack(v.to_numpy()).astype(np.float64)
         cells = _cell_scores(X).argmax(axis=1)
-        R = _normalize(X) - C[cells]
-        codes = _encode(R)
+        codes = _chain_encode(_chain_normalize(X) - C[cells], Wb)
         return pd.DataFrame({"cell": cells.astype("int32"),
                              "code": [c.tolist() for c in codes]})
 
@@ -498,7 +504,7 @@ def ivfpq_topk_md5(df: DataFrame, query_ids, k: int = 5, *,
     Q = np.array([[float(x) for x in r.v] for r in qrows])
     probes = np.argsort(-_cell_scores(Q), axis=1,
                         kind="stable")[:, :n_probe].astype(np.int32)
-    Qh = _normalize(Q)
+    Qh = _chain_normalize(Q)
     nq = len(Q)
     # T[q, p, s, j] = chain ||(q̂ - c_probe)_s - w_{s,j}||²
     T = np.empty((nq, n_probe, m, K))
@@ -689,25 +695,6 @@ def pq_topk_md5(df: DataFrame, query_ids, k: int = 5, *, m: int = 8,
     sub = dim // m
     Wb = _md5_codebook(m, K, sub, seed_code)
 
-    def _normalize(X: np.ndarray) -> np.ndarray:
-        q1 = np.zeros(len(X))
-        for i in range(dim):
-            q1 += X[:, i] * X[:, i]
-        return X / np.sqrt(q1)[:, None]
-
-    def _encode(Xh: np.ndarray) -> np.ndarray:
-        codes = np.empty((len(Xh), m), dtype=np.int32)
-        for s in range(m):
-            D = np.empty((len(Xh), K))
-            for j in range(K):
-                acc = np.zeros(len(Xh))
-                for i in range(sub):
-                    t = Xh[:, s * sub + i] - Wb[s, j, i]
-                    acc += t * t
-                D[:, j] = acc
-            codes[:, s] = D.argmin(axis=1)
-        return codes
-
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("array<int>")
@@ -715,7 +702,7 @@ def pq_topk_md5(df: DataFrame, query_ids, k: int = 5, *, m: int = 8,
         if len(v) == 0:
             return pd.Series([], dtype="object")
         X = np.vstack(v.to_numpy()).astype(np.float64)
-        codes = _encode(_normalize(X))
+        codes = _chain_encode(_chain_normalize(X), Wb)
         return pd.Series([c.tolist() for c in codes])
 
     encoded = df.select(F.col(id_col).cast("long").alias("__id"),
@@ -727,7 +714,7 @@ def pq_topk_md5(df: DataFrame, query_ids, k: int = 5, *, m: int = 8,
     if not qrows:
         raise ValueError("no query vectors found")
     q_ids = np.array([int(r.q) for r in qrows], dtype=np.int64)
-    Q = _normalize(np.array([[float(x) for x in r.v] for r in qrows]))
+    Q = _chain_normalize(np.array([[float(x) for x in r.v] for r in qrows]))
     nq = len(Q)
     # T[q, s, j] = chain ||q̂_s - w_{s,j}||²
     T = np.empty((nq, m, K))

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pythonql_spark.operators.text import sql_str
+from pythonql_spark.operators.text import md5_prefix_int, sql_str
 
 BUCKETS = 10_000
 
@@ -60,11 +60,7 @@ def hash_bucket(expr: str, dialect: str = "spark",
     identical values in Spark SQL and DuckDB."""
     s = f"cast({expr} as string)" if dialect == "spark" else \
         f"cast({expr} as varchar)"
-    if dialect == "spark":
-        h = f"cast(conv(substring(md5({s}), 1, 8), 16, 10) as bigint)"
-    else:
-        h = f"cast(('0x' || substring(md5({s}), 1, 8)) as bigint)"
-    return f"({h} % {buckets})"
+    return f"({md5_prefix_int(s, 8, dialect)} % {buckets})"
 
 
 def sample_fraction(df: DataFrame, fraction: float,

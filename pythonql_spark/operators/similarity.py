@@ -556,8 +556,9 @@ def lsh_sign_exprs(dim: int, n_planes: int, n_tables: int, *,
     trick): bit ``p`` of table ``t`` is 1 iff the fixed left-to-right
     ± chain over the vector's elements is positive.  Both dialects run
     the identical IEEE double chain, so signatures — and therefore the
-    LSH candidate sets — reproduce bit-for-bit in DuckDB."""
-    import hashlib as _hl
+    LSH candidate sets — reproduce bit-for-bit in DuckDB.  The signs
+    are :func:`_md5_sign_matrix`'s, shared with the Arrow UDF."""
+    S = _md5_sign_matrix(dim, n_planes, n_tables, seed)
     sig_exprs = []
     for t in range(n_tables):
         bits = []
@@ -567,9 +568,7 @@ def lsh_sign_exprs(dim: int, n_planes: int, n_tables: int, *,
                 el = (f"cast(element_at({vec_col}, {i + 1}) as double)"
                       if dialect == "spark"
                       else f"cast({vec_col}[{i + 1}] as double)")
-                pos = _hl.md5(
-                    f"lsh:{seed}:{t}:{p}:{i}".encode()).digest()[0] & 1
-                terms.append(("+ " if pos else "- ") + el)
+                terms.append(("+ " if S[t, p, i] > 0 else "- ") + el)
             chain = " ".join(terms).lstrip("+ ")
             bits.append(f"(cast(({chain}) > 0 as bigint) << {p})")
         sig_exprs.append("(" + " + ".join(bits) + ")")
@@ -579,7 +578,8 @@ def lsh_sign_exprs(dim: int, n_planes: int, n_tables: int, *,
 def _md5_sign_matrix(dim: int, n_planes: int, n_tables: int,
                      seed: int = 5) -> "np.ndarray":
     """(n_tables, n_planes, dim) ±1 matrix, md5-parity derived — the
-    same signs :func:`lsh_sign_exprs` embeds as expression literals."""
+    one sign source for :func:`lsh_sign_exprs` (SQL) and
+    :func:`_md5_sigs_col` (Arrow)."""
     import hashlib as _hl
     S = np.empty((n_tables, n_planes, dim), dtype=np.float64)
     for t in range(n_tables):
@@ -749,14 +749,14 @@ def ivf_cell_exprs(dim: int, n_cells: int, *, vec_col: str = "embedding",
                    seed: int = 11, base: int = 1) -> list[str]:
     """One per-cell score expression (fixed left-to-right ± chain over
     the vector's elements) — the SQL mirror of the Arrow chains in
-    :func:`_ivf_scores_col`."""
-    import hashlib as _hl
+    :func:`_ivf_scores_col`, reading the same :func:`_ivf_sign_matrix`
+    signs."""
+    S = _ivf_sign_matrix(dim, n_cells, seed)
     out = []
     for c in range(n_cells):
         terms = []
         for i in range(dim):
-            pos = _hl.md5(f"ivf:{seed}:{c}:{i}".encode()).digest()[0] & 1
-            terms.append(("+ " if pos else "- ")
+            terms.append(("+ " if S[c, i] > 0 else "- ")
                          + f"cast({vec_col}[{i + base}] as double)")
         out.append("(" + " ".join(terms).lstrip("+ ") + ")")
     return out

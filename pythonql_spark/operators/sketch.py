@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from pythonql_spark.operators.text import md5_prefix_int
+
 # log2 of HLL register count: 12 → ~1.6% relative standard error, 4KB
 DEFAULT_LG_K = 12
 
@@ -187,15 +189,6 @@ def sketch_overlap(a: DataFrame, b: DataFrame) -> DataFrame:
 # DuckDB evaluate bit-identically — every register / every sampled
 # value lands under the driver's full value-hash oracle.
 
-# 60-bit md5 hash of a string expression, identical in both dialects
-# (dedup._h60 is the same convention; repeated here so the sketch
-# module stays import-light).
-def _h60(arg: str, dialect: str) -> str:
-    if dialect == "spark":
-        return (f"cast(conv(substring(md5({arg}), 1, 15), 16, 10) "
-                "as bigint)")
-    return f"cast(('0x' || substring(md5({arg}), 1, 15)) as bigint)"
-
 
 HLL_P_BITS = 8           # 256 registers — ~6.5% RSE, 256 ints of state
 _HLL_FIELD = 60 - HLL_P_BITS   # rho field: the hash bits below the bucket
@@ -234,7 +227,7 @@ def hll_registers_md5(df: DataFrame, cols: list[str],
     shift = 60 - p_bits
     entries = []
     for c in cols:
-        h = _h60(f"cast({c} as string)", "spark")
+        h = md5_prefix_int(f"cast({c} as string)", 15, "spark")
         entries.append(
             f"named_struct('col_name', '{c}', "
             f"'bucket', cast(shiftright({h}, {shift}) as int), "
@@ -302,7 +295,7 @@ def hll_registers_md5_sql(table: str, cols: list[str],
         f"SELECT '{c}' AS col_name, cast({c} as varchar) AS v "
         f"FROM {table} WHERE ({where}) AND {c} IS NOT NULL"
         for c in cols)
-    h = _h60("v", "duck")
+    h = md5_prefix_int("v", 15, "duck")
     return f"""
 WITH vals AS ({vals}),
 hashed AS (SELECT col_name, cast({h} >> {shift} as int) AS bucket,
@@ -323,7 +316,7 @@ def bottomk_sample_md5(df: DataFrame, key: str, id_col: str,
     re-absorbing a replayed subset is a no-op.  Spark plans this as a
     WindowGroupLimit: each map task ships at most k rows per group."""
     w = Window.partitionBy(key).orderBy("__h", id_col)
-    h = _h60(f"cast({id_col} as string)", "spark")
+    h = md5_prefix_int(f"cast({id_col} as string)", 15, "spark")
     return (df.withColumn("__h", F.expr(h))
             .withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") <= k)
@@ -371,7 +364,7 @@ def sample_quantiles_md5_sql(table: str, value_col: str, key: str,
                              quantiles: tuple = (0.5, 0.9, 0.99),
                              split: str | None = None) -> str:
     """DuckDB mirror of :func:`sample_quantiles_md5`."""
-    h = _h60(f"cast({id_col} as varchar)", "duck")
+    h = md5_prefix_int(f"cast({id_col} as varchar)", 15, "duck")
     if split is not None:
         halves = "\nUNION ALL ".join(f"""
 SELECT * FROM (
@@ -421,7 +414,8 @@ def _cms_slots(col: str, depth: int, width: int, dialect: str) -> list:
     cast_t = "string" if dialect == "spark" else "varchar"
     out = []
     for d in range(depth):
-        h = _h60(f"concat('cms{d}:', cast({col} as {cast_t}))", dialect)
+        h = md5_prefix_int(f"concat('cms{d}:', cast({col} as {cast_t}))",
+                           15, dialect)
         out.append(f"cast({h} % {width} as int)")
     return out
 
@@ -525,7 +519,7 @@ def hll_registers_keyed(df: DataFrame, key_exprs: dict, col: str,
     ``{"hour": "date_trunc('hour', ts)"}``).  Shuffle is bounded at
     |key groups| * 2^p_bits rows (map-side partial max)."""
     shift = 60 - p_bits
-    h = _h60(f"cast({col} as string)", "spark")
+    h = md5_prefix_int(f"cast({col} as string)", 15, "spark")
     keyed = df.filter(F.col(col).isNotNull()).selectExpr(
         *[f"{e} as {name}" for name, e in key_exprs.items()],
         f"cast(shiftright({h}, {shift}) as int) as bucket",

@@ -30,23 +30,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pythonql_spark.operators.text import words
-
-
-def _kgram_hash(s: str, dialect: str) -> str:
-    """60-bit bigint hash of a string expression, identical in Spark
-    SQL and DuckDB (md5 prefix — k-gram text never leaves the scan)."""
-    if dialect == "spark":
-        return f"cast(conv(substring(md5({s}), 1, 15), 16, 10) as bigint)"
-    return f"cast(('0x' || substring(md5({s}), 1, 15)) as bigint)"
+from pythonql_spark.operators.text import md5_prefix_int, words
 
 
 def _kgram_rows(df: DataFrame, k: int, id_col: str,
-                text_col: str, hash_fn=None) -> DataFrame:
+                text_col: str, hex_digits: int = 15) -> DataFrame:
     """(id, start, h): one row per k-gram occurrence; start is
-    1-based token position.  ``hash_fn`` defaults to the 60-bit
-    :func:`_kgram_hash` (winnowing passes the 36-bit variant)."""
-    hash_fn = hash_fn or _kgram_hash
+    1-based token position.  ``h`` is the dual-dialect md5 prefix of
+    the k-gram (k-gram text never leaves the scan): 60 bits by
+    default, winnowing passes 9 digits (36 bits)."""
     w = words(f"lower({text_col})")
     gram = f"concat_ws(' ', slice(w, i, {k}))"
     # NB: Spark's sequence(1, 0) is a DESCENDING [1, 0], not empty —
@@ -54,7 +46,7 @@ def _kgram_rows(df: DataFrame, k: int, id_col: str,
     kg = (f"transform(array({w}), w -> "
           f"CASE WHEN size(w) < {k} THEN array() "
           f"ELSE transform(sequence(1, size(w) - {k} + 1), "
-          f"i -> {hash_fn(gram, 'spark')}) END"
+          f"i -> {md5_prefix_int(gram, hex_digits, 'spark')}) END"
           f")[0]")
     return (df.select(F.col(id_col), F.posexplode(F.expr(kg)))
             .select(F.col(id_col), (F.col("pos") + 1).alias("start"),
@@ -118,7 +110,7 @@ WITH sp AS (SELECT {id_col}, {w} AS w FROM {table}),
 kg AS (
   SELECT {id_col}, unnest(list_transform(
     range(1, greatest(len(w) - {k} + 1, 0) + 1),
-    i -> {{'s': i, 'h': {_kgram_hash(kg_str, 'duck')}}})) AS u
+    i -> {{'s': i, 'h': {md5_prefix_int(kg_str, 15, 'duck')}}})) AS u
   FROM sp),
 kg2 AS (SELECT {id_col}, u.s AS start, u.h AS h FROM kg),
 dup_h AS (SELECT h FROM kg2 GROUP BY h HAVING count(*) > 1),
@@ -149,7 +141,7 @@ WITH sp AS (SELECT {id_col}, {w} AS w FROM {table}),
 kg AS (
   SELECT {id_col}, unnest(list_transform(
     range(1, greatest(len(w) - {k} + 1, 0) + 1),
-    i -> {{'s': i, 'h': {_kgram_hash(kg_str, 'duck')}}})) AS u
+    i -> {{'s': i, 'h': {md5_prefix_int(kg_str, 15, 'duck')}}})) AS u
   FROM sp),
 kg2 AS (SELECT {id_col}, u.s AS start, u.h AS h FROM kg),
 holders AS (
@@ -210,16 +202,10 @@ def strip_dup_spans(df: DataFrame, k: int = 8, *,
                     F.expr(n_rm).alias("n_removed_tokens")))
 
 
-def _kgram_hash36(s: str, dialect: str) -> str:
-    """36-bit variant of :func:`_kgram_hash` — small enough that
-    ``hash * 2^24 + position`` stays inside a SIGNED bigint
-    (36 + 24 = 60 bits)."""
-    if dialect == "spark":
-        return f"cast(conv(substring(md5({s}), 1, 9), 16, 10) as bigint)"
-    return f"cast(('0x' || substring(md5({s}), 1, 9)) as bigint)"
-
-
 _POS_BITS = 1 << 24          # positions < 16.7M tokens per document
+# winnowing's k-gram hash width: 9 hex digits = 36 bits, so
+# ``hash * 2^24 + position`` stays inside a SIGNED bigint (36 + 24 = 60)
+_WINNOW_HEX = 9
 
 
 def winnow_fingerprints(df: DataFrame, k: int = 5, w: int = 4, *,
@@ -253,7 +239,7 @@ def winnow_fingerprints(df: DataFrame, k: int = 5, w: int = 4, *,
     from pyspark.sql.window import Window as W
     from pythonql_spark.sources.catalog import fan_out_small
     grams = _kgram_rows(fan_out_small(df), k, id_col, text_col,
-                        hash_fn=_kgram_hash36)
+                        hex_digits=_WINNOW_HEX)
     win = (W.partitionBy(id_col).orderBy("start")
            .rowsBetween(-(w - 1), 0))
     return (grams
@@ -280,7 +266,7 @@ WITH sp AS (SELECT {id_col}, {wd} AS w FROM {table}),
 kg AS (
   SELECT {id_col}, unnest(list_transform(
     range(1, greatest(len(w) - {k} + 1, 0) + 1),
-    i -> {{'s': i, 'h': {_kgram_hash36(kg_str, 'duck')}}})) AS u
+    i -> {{'s': i, 'h': {md5_prefix_int(kg_str, _WINNOW_HEX, 'duck')}}})) AS u
   FROM sp),
 kg2 AS (SELECT {id_col}, u.s AS start, u.h AS h FROM kg),
 sel AS (

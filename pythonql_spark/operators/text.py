@@ -37,6 +37,18 @@ def sql_str(t: str) -> str:
     return "'" + t.replace("'", "''") + "'"
 
 
+def md5_prefix_int(expr: str, hex_digits: int, dialect: str) -> str:
+    """The first ``hex_digits`` hex digits of ``md5(expr)`` as a
+    non-negative bigint — THE dual-dialect hash: identical values in
+    Spark SQL and DuckDB, so every md5 (oracle-portable) path hashes
+    through here.  ``expr`` must be a string expression; at most 15
+    digits (60 bits) fit a signed bigint."""
+    if dialect == "spark":
+        return (f"cast(conv(substring(md5({expr}), 1, {hex_digits}), "
+                f"16, 10) as bigint)")
+    return f"cast(('0x' || substring(md5({expr}), 1, {hex_digits})) as bigint)"
+
+
 def words(col: str = "text", dialect: str = "spark") -> str:
     if dialect == "spark":
         return f"split(trim({col}), '{_ws(dialect)}')"
@@ -231,15 +243,6 @@ SELECT {id_col}, cast(cast(sum(lp) as double) / count(lp) as double) AS mean_log
 FROM scored GROUP BY {id_col}"""
 
 
-def _seg_hash(s: str, dialect: str) -> str:
-    """60-bit md5-prefix bigint of a normalized segment — identical in
-    Spark SQL and DuckDB (the oracle-portable variant of xxhash64)."""
-    if dialect == "spark":
-        return (f"cast(conv(substring(md5(lower(trim({s}))), 1, 15), "
-                f"16, 10) as bigint)")
-    return f"cast(('0x' || substring(md5(lower(trim({s}))), 1, 15)) as bigint)"
-
-
 def remove_boilerplate(df, id_col: str = "doc_id",
                        text_col: str = "text", *,
                        min_doc_frac: float = 0.2,
@@ -265,7 +268,7 @@ def remove_boilerplate(df, id_col: str = "doc_id",
             return f"xxhash64(lower(trim({s})))"
     elif hash_fn == "md5":
         def h(s):
-            return _seg_hash(s, "spark")
+            return md5_prefix_int(f"lower(trim({s}))", 15, "spark")
     else:
         raise ValueError(f"hash_fn must be xxhash64|md5, got {hash_fn!r}")
     # split()'s second argument is a Java REGEX while array_join's is
@@ -311,8 +314,8 @@ def remove_boilerplate_oracle_sql(*, min_doc_frac: float = 0.2,
                                   extra_cols: str = "") -> str:
     """DuckDB mirror of ``remove_boilerplate(hash_fn="md5")`` with a
     newline delimiter: (id, extra_cols..., rebuilt text, n_removed)."""
-    h = _seg_hash("seg", "duck")
-    hx = _seg_hash("x", "duck")
+    h = md5_prefix_int("lower(trim(seg))", 15, "duck")
+    hx = md5_prefix_int("lower(trim(x))", 15, "duck")
     return f"""
 WITH sp AS (SELECT *, str_split({text_col}, chr(10)) AS segs
             FROM {table}),

@@ -124,29 +124,41 @@ def test_dedup_keep(docs):
     assert kept == {0, 3, 5}
 
 
-def test_dedup_increment(spark, docs):
-    from pythonql_spark.operators.dedup import (dedup_increment,
-                                                minhash_lsh_pairs_bipartite)
-    new = spark.createDataFrame(
+MINHASH_FAMILIES = ["xxhash64", "md5"]
+
+
+@pytest.fixture(scope="module")
+def new_batch(spark):
+    return spark.createDataFrame(
         [(100, "the quick brown fox jumps over the lazy dog", "a"),  # dup of corpus 0
          (101, "a genuinely novel document about incremental ingest", "a"),
          (102, "a genuinely novel document about incremental ingest!", "a"),  # dup of 101
          (103, "the quick brown fox leaps over the lazy dog", "b")],  # near-dup of corpus 2
         "doc_id long, text string, source string")
-    cross = minhash_lsh_pairs_bipartite(new, docs, ngram=1,
-                                        jaccard_threshold=0.5)
+
+
+@pytest.mark.parametrize("hash_fn", MINHASH_FAMILIES)
+def test_bipartite_cross_pairs(new_batch, docs, hash_fn):
+    from pythonql_spark.operators.dedup import minhash_lsh_pairs_bipartite
+    cross = minhash_lsh_pairs_bipartite(new_batch, docs, ngram=1,
+                                        jaccard_threshold=0.5,
+                                        hash_fn=hash_fn)
     got = {(r.id_a, r.id_b) for r in cross.collect()}
     assert (100, 0) in got and (103, 2) in got
     assert not any(a == 101 for a, _ in got)
 
+
+def test_dedup_increment(new_batch, docs):
+    from pythonql_spark.operators.dedup import dedup_increment
     kept = {r.doc_id
-            for r in dedup_increment(new, docs, ngram=1,
+            for r in dedup_increment(new_batch, docs, ngram=1,
                                      jaccard_threshold=0.5).collect()}
     # 100/103 collide with the corpus; 102 loses to 101 within-batch
     assert kept == {101}
 
 
-def test_oversize_bucket_clique_still_dedups(spark):
+@pytest.mark.parametrize("hash_fn", MINHASH_FAMILIES)
+def test_oversize_bucket_clique_still_dedups(spark, hash_fn):
     """The no-silent-caps rule: a clique of max_bucket_size + 10
     identical-shingle docs lands every band bucket over the cap; the
     star-pair fallback must still fully dedup it (one survivor), and
@@ -159,12 +171,14 @@ def test_oversize_bucket_clique_still_dedups(spark):
            [(1000, "a genuinely unique document unlike the others")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     pairs = minhash_lsh_pairs(df, ngram=1, jaccard_threshold=0.5,
-                              max_bucket_size=cap)
+                              max_bucket_size=cap, hash_fn=hash_fn)
     got = {(r.id_a, r.id_b) for r in pairs.collect()}
     # star pairing: min id 0 paired with every clique member
     assert {(0, j) for j in range(1, n)} <= got
     kept = {r.doc_id for r in dedup_keep(df, pairs).collect()}
     assert kept == {0, 1000}
+    # the report bands with xxhash64; identical texts share every
+    # bucket under either family
     report = minhash_bucket_report(df, ngram=1, max_bucket_size=cap)
     rrows = report.collect()
     assert rrows and all(r.n == n for r in rrows)
@@ -182,7 +196,8 @@ def test_oversize_bucket_star_simhash(spark):
     assert got == {(0, j) for j in range(1, n)}
 
 
-def test_oversize_corpus_bucket_keeps_representatives(spark, docs):
+@pytest.mark.parametrize("hash_fn", MINHASH_FAMILIES)
+def test_oversize_corpus_bucket_keeps_representatives(spark, hash_fn):
     """Bipartite path: an oversize corpus bucket is truncated to its
     smallest-id representatives, not dropped — a new doc duplicating
     mass-replicated corpus content is still caught."""
@@ -196,7 +211,8 @@ def test_oversize_corpus_bucket_keeps_representatives(spark, docs):
         "doc_id long, text string")
     cross = minhash_lsh_pairs_bipartite(new, corpus, ngram=1,
                                         jaccard_threshold=0.5,
-                                        max_bucket_size=cap)
+                                        max_bucket_size=cap,
+                                        hash_fn=hash_fn)
     got = {(r.id_a, r.id_b) for r in cross.collect()}
     assert got                                  # caught, not dropped
     assert got <= {(500, j) for j in range(cap)}  # min-id representatives

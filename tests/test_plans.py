@@ -75,8 +75,9 @@ def test_whole_stage_codegen(spark, sf_dir):
     assert re.search(r"\*\(\d+\) HashAggregate", plan), plan[:500]
 
 
-def test_dedup_minhash_no_cartesian(spark, sf_dir):
-    plan = formatted_plan(QUERIES["dedup_minhash"](spark, sf_dir))
+@pytest.mark.parametrize("key", ["dedup_minhash", "dedup_minhash_md5"])
+def test_dedup_minhash_no_cartesian(spark, sf_dir, key):
+    plan = formatted_plan(QUERIES[key](spark, sf_dir))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     # the signature aggregation must be partial (map-side) too
