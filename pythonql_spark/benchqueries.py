@@ -511,8 +511,10 @@ def pql_match(spark, sf):
     """The reference's match-clause STRING syntax through the pql()
     front-end (reference tests/match_tests.py shapes) against a real
     table column: partial match binds props.k, the where clause casts
-    engine-side.  Same plan as the DSL `match_partial` key — JVM
-    get_json_object, no Python in the row path."""
+    engine-side.  Same plan as the DSL `match_partial` key: the JSON
+    match walker runs in one MapInPandas pass over the column (Arrow
+    batches, not a row-at-a-time UDF); the where clause's cast and
+    comparison stay in the JVM."""
     from pythonql_spark.pql import pql
     ev = load_table(spark, sf, "events").select("props", "event_id")
     return pql(spark, """
@@ -830,17 +832,19 @@ FROM s JOIN e ON e.user_id = s.user_id AND e.rn >= s.s_at
 GROUP BY s.user_id, s.s_at
 """)
 def window_predicate(spark, sf):
-    # predicate windows are general Python-predicate operators; THIS
-    # instance (start on high value, close at the first low value,
-    # only_end) is SQL-expressible as a range join, so it gets a full
-    # value-hash oracle: e_at = min following rn with the end
-    # predicate, inner join = only_end drop of unclosed windows
+    # start on high value, close at the first low value, only_end:
+    # both conditions are Columns over the row itself, so the operator
+    # runs as JVM window functions (row_number plus a running min over
+    # the descending sequence), no Python.  The same instance is
+    # SQL-expressible as a range join, so it gets a full value-hash
+    # oracle: e_at = min following rn with the end predicate, inner
+    # join = only_end drop of unclosed windows
     from pyspark.sql import functions as F
     from pythonql_spark.operators import predicate_windows
     ev = load_table(spark, sf, "events")
     w = predicate_windows(ev, order_by=["ts", "event_id"],
-                          start_when=lambda c, a, p, n: c["value"] > 150,
-                          end_when=lambda c, a, p, n, sc, sa: c["value"] < 50,
+                          start_when=F.col("value") > 150,
+                          end_when=F.col("value") < 50,
                           partition_by="user_id", only_end=True)
     return w.select("user_id", "s_at", "e_at")
 

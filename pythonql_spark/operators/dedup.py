@@ -28,6 +28,8 @@ hash family and nothing else — the plan shape is the same for both:
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -35,6 +37,8 @@ from pythonql_spark.operators.text import fingerprint, md5_prefix_int
 
 from pythonql_spark.helpers import local_rows_df
 from pythonql_spark.sources.catalog import fan_out_small
+
+_log = logging.getLogger(__name__)
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text",
@@ -604,6 +608,11 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
         comp = jumped
         if changed == 0:
             break
+    else:
+        # no silent fallback: one warning per unconverged result
+        _log.warning("connected_components: labels still changing after "
+                     "max_iter=%d rounds; returning them unconverged (a "
+                     "component may carry several labels)", max_iter)
     return comp.union(iso) if nodes is not None else comp
 
 

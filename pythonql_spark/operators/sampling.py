@@ -189,23 +189,15 @@ def global_index(df: DataFrame, sort_cols=None, out_col: str = "pos",
     keyed = (keyed.withColumn("__pid", F.spark_partition_id())
              .localCheckpoint(eager=False))
 
-    # local numbering in ONE Arrow pass (a window PARTITION BY the
-    # partition id would re-shuffle the whole corpus a second time;
-    # this streams batches in partition order with a running counter).
-    # Copy the schema: df.schema is a cached object, and mutating it
-    # via .add() desyncs the Python-side column list from the plan.
-    from pyspark.sql.types import LongType, StructField, StructType
-    out_schema = StructType(keyed.schema.fields +
-                            [StructField("__rn", LongType())])
-
-    def number(batches):
-        i = 0
-        for pdf in batches:
-            pdf = pdf.assign(__rn=range(i, i + len(pdf)))
-            i += len(pdf)
-            yield pdf
-
-    local = keyed.mapInPandas(number, out_schema)
+    # local numbering in the JVM, straight off the checkpoint: the
+    # checkpointed RDD keeps the partition layout __pid was read in,
+    # and monotonically_increasing_id is (partition index << 33) +
+    # the row's position in its partition, so subtracting __pid << 33
+    # leaves the position.  (A window PARTITION BY __pid would
+    # re-shuffle the whole corpus a second time.)
+    local = keyed.withColumn(
+        "__rn", F.monotonically_increasing_id()
+        - F.shiftleft(F.col("__pid").cast("bigint"), 33))
     # per-partition starting offsets: the groupBy's map-side partial
     # agg emits ONE row per partition, and Spark reuses the range
     # exchange (ReusedExchange) instead of recomputing it

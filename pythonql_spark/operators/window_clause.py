@@ -11,11 +11,28 @@ and e_* variables).
 
 Spark-first shape: the sequence is a DataFrame partitioned by
 ``partition_by`` (one logical sequence per key — e.g. one per user)
-and ordered by ``order_by`` within the key.  Each key's sequence is
-processed in one Arrow batch via ``applyInPandas`` — distributed
-across executors by key, never collected to the driver.  For a single
-global sequence pass ``partition_by=None`` (all rows flow to one
-task; fine for bounded sequences, document the skew).
+and ordered by ``order_by`` within the key.  A condition is either a
+Python callable or a pyspark ``Column``:
+
+* Callables (DSL lambdas, pql ``when`` strings) run in an Arrow walker
+  (``mapInPandas`` over key-sorted partitions) — distributed across
+  executors by key, never collected to the driver.
+* A ``Column`` is a boolean over the sequence row's own columns; NULL
+  counts as false.  When every condition is a Column and the window
+  is sliding, the operator compiles to plain JVM window functions —
+  no Python in the plan.  A Column cannot see neighbours or the
+  window's start, so the next end position is the same for every
+  window open at a row: one ``row_number`` numbers the sequence, and
+  a running ``min(CASE WHEN end THEN rn END)`` over the key in
+  DESCENDING rn order (a running frame, linear per key) gives each
+  start its closing position.
+* Column conditions in a TUMBLING window (whose opens depend on the
+  previous close), or mixed with a callable, are evaluated into hidden
+  boolean columns that the Arrow walker reads; they never appear in
+  the window structs.
+
+For a single global sequence pass ``partition_by=None`` (all rows flow
+to one task; fine for bounded sequences, document the skew).
 """
 
 from __future__ import annotations
@@ -23,7 +40,7 @@ from __future__ import annotations
 from typing import Callable
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -41,8 +58,8 @@ def _norm_key(v):
 def predicate_windows(
     df: DataFrame,
     order_by: str | list[str],
-    start_when: Callable,
-    end_when: Callable | None = None,
+    start_when: Callable | Column,
+    end_when: Callable | Column | None = None,
     *,
     partition_by: str | list[str] | None = None,
     tumbling: bool = False,
@@ -53,9 +70,14 @@ def predicate_windows(
     structs of the non-partition columns, in order), ``s_at``/``e_at``
     (0-based indexes into the key's sequence) and ``closed``.
 
-    ``start_when(curr, at, prev, nxt)`` and
-    ``end_when(curr, at, prev, nxt, s_curr, s_at)`` receive dict rows
-    (or the bare value if the sequence has a single value column).
+    A callable ``start_when(curr, at, prev, nxt)`` /
+    ``end_when(curr, at, prev, nxt, s_curr, s_at)`` receives dict rows
+    (or the bare value if the sequence has a single value column).  A
+    ``Column`` condition is a boolean over the current row's columns,
+    NULL counting as false; all-Column sliding windows run as JVM
+    window functions (:func:`_column_sliding_windows`), anything else
+    through the Arrow walker, Column conditions as hidden flag
+    columns.  ``end_when=None`` closes no window.
     """
     part = [partition_by] if isinstance(partition_by, str) else (partition_by or [])
     order = [order_by] if isinstance(order_by, str) else list(order_by)
@@ -65,6 +87,23 @@ def predicate_windows(
                     if f.name not in part and f.name not in hidden]
     value_names = [f.name for f in value_fields]
     single = value_names[0] if len(value_names) == 1 else None
+
+    conds = [c for c in (start_when, end_when) if c is not None]
+    if not tumbling and all(isinstance(c, Column) for c in conds):
+        return _column_sliding_windows(df, order, part, value_names,
+                                       start_when, end_when, only_end)
+    # Column conditions on the walker path: one hidden boolean per
+    # row, read by the walker instead of a call (and kept out of the
+    # walker's closure: a Column does not pickle)
+    start_flag = end_flag = None
+    if isinstance(start_when, Column):
+        start_flag = "__pw_start"
+        df = df.withColumn(start_flag, F.coalesce(start_when, F.lit(False)))
+        start_when = None
+    if isinstance(end_when, Column):
+        end_flag = "__pw_end"
+        df = df.withColumn(end_flag, F.coalesce(end_when, F.lit(False)))
+        end_when = None
 
     out_schema = T.StructType(
         [f for f in df.schema.fields if f.name in part]
@@ -82,6 +121,8 @@ def predicate_windows(
         keys = {k: pdf.iloc[0][k] for k in part} if part else {}
         rows = pdf[value_names].to_dict("records")
         vals = [r[single] if single else r for r in rows]
+        starts = pdf[start_flag].tolist() if start_flag else None
+        ends = pdf[end_flag].tolist() if end_flag else None
         n = len(vals)
         out = []
         open_ws: list[dict] = []
@@ -89,13 +130,18 @@ def predicate_windows(
             prev = vals[i - 1] if i > 0 else None
             nxt = vals[i + 1] if i + 1 < n else None
             if not tumbling or not open_ws:
-                if start_when(vals[i], i, prev, nxt):
+                if (starts[i] if starts is not None
+                        else start_when(vals[i], i, prev, nxt)):
                     open_ws.append({"rows": [], "s_at": i, "s_curr": vals[i]})
             still = []
             for w in open_ws:
                 w["rows"].append(rows[i])
-                if end_when and end_when(vals[i], i, prev, nxt,
-                                         w["s_curr"], w["s_at"]):
+                if ends is not None:
+                    closes = ends[i]
+                else:
+                    closes = end_when and end_when(vals[i], i, prev, nxt,
+                                                   w["s_curr"], w["s_at"])
+                if closes:
                     out.append({**keys, "window": w["rows"],
                                 "s_at": w["s_at"], "e_at": i, "closed": True})
                 else:
@@ -177,6 +223,59 @@ def predicate_windows(
     # single global sequence: one group (bounded-size sequences only)
     return (df.withColumn("__g", F.lit(1)).groupBy("__g")
             .applyInPandas(lambda pdf: run(pdf.drop(columns="__g")), out_schema))
+
+
+def _column_sliding_windows(df: DataFrame, order: list[str],
+                            part: list[str], value_names: list[str],
+                            start: Column, end: Column | None,
+                            only_end: bool) -> DataFrame:
+    """Sliding windows whose conditions are Columns, as JVM window
+    functions.  ``s_at`` is the row's ``row_number() - 1``; a window
+    opened at ``s_at`` closes at the first position >= ``s_at`` where
+    ``end`` holds: the running ``min(CASE WHEN end THEN rn END)`` over
+    the key ordered by rn DESCENDING, ``ROWS BETWEEN UNBOUNDED
+    PRECEDING AND CURRENT ROW``.  (The ascending ``CURRENT ROW AND
+    UNBOUNDED FOLLOWING`` frame gives the same value but re-aggregates
+    the rest of the key for every row: quadratic per key.)
+
+    ``window`` slices the key's whole sequence — one sorted
+    ``collect_list`` per key, the walker's per-key memory contract —
+    joined back on the key.  The join is on a struct of the partition
+    columns (struct equality matches null keys, as the walker groups
+    them) against a frame grouped by that struct, so when the caller
+    does not select ``window`` Catalyst drops the join and the
+    collect entirely.  ``order_by`` should be a total order, as for
+    any ``row_number``: ties number arbitrarily."""
+    from pyspark.sql.window import Window as W
+
+    by = W.partitionBy(*part)
+    rn = F.col("__rn")
+    seq = df.withColumn("__rn", (F.row_number().over(by.orderBy(*order))
+                                 - 1).cast("long"))
+    back = by.orderBy(rn.desc()).rowsBetween(W.unboundedPreceding,
+                                              W.currentRow)
+    # a NULL condition fails both CASE WHEN and the filter
+    next_end = (F.min(F.when(end, rn)).over(back) if end is not None
+                else F.lit(None).cast("long"))
+    key = F.struct(*part) if part else F.lit(0)
+    closed = F.col("__end").isNotNull()
+    # few DataFrame steps: each one is analyzed while the plan is built
+    wins = (seq.select("*", next_end.alias("__end"),
+                       F.max(rn).over(back).alias("__last"), key.alias("__k"))
+            .filter(start & closed if only_end else start))
+    # the higher-order functions as SQL text: Python lambdas cost
+    # several JVM round trips each at build time
+    values = ", ".join("`" + c.replace("`", "``") + "`" for c in value_names)
+    whole = seq.groupBy(key.alias("__k")).agg(F.expr(
+        f"array_sort(collect_list(struct(__rn AS rn, struct({values}) AS v)),"
+        " (a, b) -> CASE WHEN a.rn < b.rn THEN -1"
+        " WHEN a.rn > b.rn THEN 1 ELSE 0 END)").alias("__seq"))
+    e_at = F.coalesce("__end", "__last")
+    window = F.expr("transform(slice(__seq, __rn + 1, "
+                    "coalesce(__end, __last) - __rn + 1), x -> x.v)")
+    return (wins.join(whole, "__k", "left")
+            .select(*part, window.alias("window"), rn.alias("s_at"),
+                    e_at.alias("e_at"), closed.alias("closed")))
 
 
 def fixed_windows(

@@ -333,8 +333,9 @@ class _Compiler:
         # reference count clause: dense 0..n-1 index.  Both forms go
         # through sampling.global_index — range-partitioned local
         # numbering — never a global single-task row_number window
-        # (and never monotonically_increasing_id, whose ids are dense
-        # only per-partition, breaking the reference's 0..n-1 contract)
+        # (and never a bare monotonically_increasing_id, whose ids are
+        # not dense across partitions, breaking the reference's 0..n-1
+        # contract; global_index adds per-partition offsets to it)
         from .operators.sampling import global_index
         if c["order"]:
             cols = []

@@ -25,6 +25,7 @@ equivalents:
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -191,6 +192,15 @@ def load_sf(spark: SparkSession, sf_dir: str | None = None,
     return out
 
 
+def _plan_has_shuffle(df: DataFrame) -> bool:
+    """Whether ``df``'s physical plan, as AQE starts it, has a shuffle
+    exchange or an aggregate.  Reads the plan text only; nothing
+    runs."""
+    tree = df._jdf.queryExecution().executedPlan().toString()
+    nodes = re.findall(r"^[\s:|+\-]*([A-Za-z]\w*)", tree, re.MULTILINE)
+    return any(n == "Exchange" or n.endswith("Aggregate") for n in nodes)
+
+
 def parallelize_small_scan(df: DataFrame,
                            min_partitions: int | None = None) -> DataFrame:
     """Give a small-file scan enough partitions to use the cluster.
@@ -213,12 +223,19 @@ def parallelize_small_scan(df: DataFrame,
     scheduling/block overhead (~50-100 ms) argues for FEWER tasks
     than cores — optimal ≈ sqrt(serial_work / per_task_overhead), so
     callers with a known-short serial head pass e.g. a quarter of
-    ``defaultParallelism``.  Partition-count inspection is
-    metadata-only — no job runs.
+    ``defaultParallelism``.
+
+    The decision reads the plan, never runs it.  An input whose plan
+    has a shuffle exchange or an aggregate is returned unchanged: its
+    width is already the session's shuffle parallelism, and asking
+    its RDD for a partition count would make AQE run those shuffle
+    stages here, at build time, and again at the action.  Otherwise
+    (a scan, optionally projected or filtered) the partition count is
+    the scan's split count, which comes from file metadata: no job.
     """
     spark = df.sparkSession
     n = min_partitions or spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= n:
+    if _plan_has_shuffle(df) or df.rdd.getNumPartitions() >= n:
         return df
     return df.repartition(n)
 

@@ -9,11 +9,24 @@ execution order flips (A,B then B,A) so a monotone load trend biases
 neither side.
 
 Usage:
-    git worktree add /tmp/pre_repo <baseline-commit>
-    python scripts/ab_interleave.py /tmp/pre_repo key1 key2 ... [--sf=DIR]
+    mkdir ../pre_repo && git archive <baseline-commit> | tar -x -C ../pre_repo
+    python scripts/ab_interleave.py ../pre_repo key1 key2 ... [--sf=DIR]
 
 Interpretation: identical code measures ratio 1.0 +/- ~0.1; treat
 anything inside [0.85, 1.15] as noise.  Medians over 2*reps runs.
+
+Python workers import the package from ``PYTHONPATH``, not from the
+driver's ``sys.path``.  Before each side builds its plan, the harness
+points ``sparkContext.environment["PYTHONPATH"]`` at that side's
+checkout, with ``PYTHONSAFEPATH=1`` so that the working directory
+does not shadow it (Python 3.11+).  Spark captures the environment
+into every Python function when the plan is built and keeps a
+separate worker pool per environment, so each side's UDF bodies run
+that side's code.  The path-step UDFs that ``pql()`` calls from SQL
+text (``pql_child`` and its siblings) are registered once per session
+per imported copy of the package; since every build re-imports the
+package, each build re-registers them under its own side's
+environment.
 
 Limit: both variants share one SparkSession and one JVM, so this
 harness cannot measure JVM-wide or static settings (session confs such
@@ -26,15 +39,28 @@ with separate-process pairs, one fresh JVM per run
 from __future__ import annotations
 
 import json
+import os
 import statistics
 import sys
 import time
+from pathlib import Path
+
+REPO = str(Path(__file__).resolve().parent.parent)
 
 
-def load_queries(path: str):
+def load_queries(spark, path: str):
+    """Import ``path``'s registry, and make the Python functions of the
+    plans built next run in workers that import from ``path`` too."""
+    path = os.path.abspath(path)
     for m in [m for m in list(sys.modules)
               if m.startswith("pythonql_spark")]:
         del sys.modules[m]
+    env = spark.sparkContext.environment
+    env["PYTHONPATH"] = path
+    # workers start as ``python -m pyspark.daemon``, which puts the
+    # working directory first on sys.path: run from a checkout, that
+    # checkout would shadow PYTHONPATH on both sides (Python >= 3.11)
+    env["PYTHONSAFEPATH"] = "1"
     sys.path.insert(0, path)
     try:
         import pythonql_spark.benchqueries as bq
@@ -53,16 +79,16 @@ def main() -> None:
             sf_dir = a.split("=", 1)[1]
         if a.startswith("--reps="):
             reps = int(a.split("=", 1)[1])
-    paths = {"A": pre_path, "B": "/root/repo"}
+    paths = {"A": pre_path, "B": REPO}
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     from pythonql_spark import get_spark
     sys.path.pop(0)
     spark = get_spark("ab")
     spark.sparkContext.setLogLevel("ERROR")
 
     # warm the worker pool the way bench.py does
-    load_queries(paths["A"])["group_agg"](spark, sf_dir).count()
+    load_queries(spark, paths["A"])["group_agg"](spark, sf_dir).count()
     from pyspark.sql import functions as F
     spark.range(64).select(
         F.pandas_udf(lambda s: s * 2, "long")(F.col("id"))).count()
@@ -70,11 +96,11 @@ def main() -> None:
     res = {k: {"A": [], "B": []} for k in keys}
     for k in keys:
         for v in ("A", "B"):                      # warm both variants
-            load_queries(paths[v])[k](spark, sf_dir).count()
+            load_queries(spark, paths[v])[k](spark, sf_dir).count()
         for rep in range(reps):
             order = ("A", "B") if rep % 2 == 0 else ("B", "A")
             for v in order:
-                q = load_queries(paths[v])[k]
+                q = load_queries(spark, paths[v])[k]
                 t0 = time.perf_counter()
                 q(spark, sf_dir).count()
                 res[k][v].append(time.perf_counter() - t0)

@@ -6,9 +6,12 @@ Usage:
     python scripts/capture_plans.py --suffix=after --out=plans/r11 key1 ...
 
 The --checkout path's pythonql_spark package is imported (sys.modules
-purged first), so "before" plans come from a baseline git worktree and
+purged first), so "before" plans come from a baseline checkout and
 "after" plans from the live repo — the same two-checkout pattern as
-scripts/ab_interleave.py.  One Spark session serves both.
+scripts/ab_interleave.py.  The checkout is also exported as
+PYTHONPATH (with PYTHONSAFEPATH=1) before the JVM starts, so the
+Python workers that --executed runs import the same package.  One
+process captures one checkout.
 
 --executed runs each key's plan first, so the formatted plan is the
 AQE-final one, and prepends the optimized logical plan.  A key listed
@@ -54,6 +57,14 @@ def main() -> None:
             sf_dir = a.split("=", 1)[1]
     out = Path(REPO) / out_dir
     out.mkdir(parents=True, exist_ok=True)
+    # the Python workers (--executed runs every UDF) import the package
+    # from PYTHONPATH: export the checkout before the JVM starts, and
+    # keep the working directory off the workers' sys.path, where a
+    # checkout run from its root would shadow it (Python >= 3.11)
+    checkout = os.path.abspath(checkout)
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (checkout, os.environ.get("PYTHONPATH")) if p)
+    os.environ["PYTHONSAFEPATH"] = "1"
 
     sys.path.insert(0, REPO)
     from pythonql_spark import get_spark

@@ -105,6 +105,9 @@ def cust_journeys_df(spark):
     sys.path.insert(0, "/root/reference/tests")
     try:
         from cust_journey_data import cust_journeys
+    except ModuleNotFoundError:
+        # same skip as the sibling test below: no reference checkout
+        pytest.skip("reference checkout not present")
     finally:
         sys.path.remove("/root/reference/tests")
     fields = ("event_name", "client_id", "date", "client_data",

@@ -86,3 +86,25 @@ def test_explicit_n_partitions_still_wins(spark):
     out = global_index(df, [F.col("s"), F.col("doc_id")],
                        out_col="pos", n_partitions=4)
     assert out.rdd.getNumPartitions() == 4
+
+
+def test_shuffled_input_decided_from_plan(spark, sf_dir):
+    """An input that already shuffles is returned unchanged WITHOUT a
+    job: asking its RDD for a partition count would make AQE run the
+    shuffle stages at build time, and the action would run them
+    again."""
+    from pyspark.sql import functions as F
+    docs = load_table(spark, sf_dir, "documents")
+    by_lang = docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n"))
+    longest = docs.groupBy("lang").agg(F.max("n_chars").alias("m"))
+    frame = docs.join(by_lang, "lang").join(longest, "lang")
+    sc = spark.sparkContext
+    sc.setJobGroup("fan_out_shuffled", "fan_out_small on a shuffled input")
+    try:
+        out = fan_out_small(frame)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = sc.statusTracker().getJobIdsForGroup("fan_out_shuffled")
+    finally:
+        sc.setJobGroup("", "")
+    assert out is frame
+    assert len(jobs) == 0

@@ -117,6 +117,27 @@ def test_connected_components_single_frame_build(spark, monkeypatch):
     assert comp == {i: 0 for i in range(n)}
 
 
+def test_connected_components_logs_unconverged(spark, caplog):
+    # a 16-node path needs several pointer-jumping rounds: max_iter=1
+    # returns the labels as they stand, and says so once
+    import logging
+
+    from pythonql_spark.operators import dedup as DD
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(15)], "id_a long, id_b long")
+    with caplog.at_level(logging.WARNING, logger=DD.__name__):
+        full = {r.id: r.comp for r in DD.connected_components(
+            pairs, driver_limit=0).collect()}
+        assert not caplog.records
+        short = {r.id: r.comp for r in DD.connected_components(
+            pairs, max_iter=1, driver_limit=0).collect()}
+    assert full == {i: 0 for i in range(16)}
+    assert set(short) == set(full) and len(set(short.values())) > 1
+    msgs = [r.getMessage() for r in caplog.records]
+    assert len(msgs) == 1 and "max_iter=1" in msgs[0], msgs
+
+
 def test_dedup_keep(docs):
     pairs = ngram_jaccard_pairs(docs, ["source"], ngram=1, threshold=0.5)
     kept = {r.doc_id for r in dedup_keep(docs, pairs).collect()}

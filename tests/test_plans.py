@@ -222,7 +222,8 @@ def test_count_clause_no_global_window(spark, sf_dir):
     partition."""
     df = QUERIES["count_clause"](spark, sf_dir)
     p = formatted_plan(df)
-    # numbering happens in mapInPandas, never a row_number window
+    # numbering reads monotonically_increasing_id off the checkpointed
+    # layout, never a row_number window
     assert "row_number" not in p, p
     # the only SinglePartition exchange allowed is the offsets branch,
     # whose input was first reduced by the per-__pid partial_count
@@ -631,3 +632,46 @@ def test_corpus_pipeline_build_jobs(spark, sf_dir, key):
 def test_pql_build_jobs(spark, sf_dir, key):
     jobs = 2 if key == "count_clause" else 0
     assert _warm_build_jobs(spark, sf_dir, key) == jobs
+
+
+# the only query-language keys whose plans carry a Python node, each
+# with its cause; every other key of the session runs in the JVM
+PQL_PYTHON_NODES = {
+    "pql_path": "ArrowEvalPython",    # the registered pql_child path UDF
+    "pql_match": "MapInPandas",       # the JSON match walker
+    "match_partial": "MapInPandas",   # the JSON match walker
+}
+_PYTHON_NODE = re.compile(r"\b(ArrowEvalPython|BatchEvalPython|MapInPandas|"
+                          r"MapInArrow|FlatMapGroupsInPandas|"
+                          r"FlatMapCoGroupsInPandas|AggregateInPandas|"
+                          r"WindowInPandas)\b")
+
+
+@pytest.mark.parametrize("key", PQL_KEYS)
+def test_pql_python_node_census(spark, sf_dir, key):
+    p = formatted_plan(QUERIES[key](spark, sf_dir))
+    found = set(_PYTHON_NODE.findall(p))
+    want = {PQL_PYTHON_NODES[key]} if key in PQL_PYTHON_NODES else set()
+    assert found == want, p
+
+
+def test_window_predicate_native_shape(spark, sf_dir):
+    """Column-predicate sliding windows: row_number plus a running min
+    over the descending sequence.  No per-key list (the unselected
+    ``window`` column is pruned with its join), and no ascending
+    ``CURRENT ROW AND UNBOUNDED FOLLOWING`` frame, which re-aggregates
+    the rest of the key for every row."""
+    p = formatted_plan(QUERIES["window_predicate"](spark, sf_dir))
+    assert not _PYTHON_NODE.search(p), p
+    assert "collect_list" not in p, p
+    assert not re.search(r"currentrow\$\(\), unboundedfollowing", p), p
+    assert "row_number" in p, p
+
+
+def test_dedup_increment_build_jobs(spark, sf_dir):
+    """fan_out_small decides the anti-joined batch frame from its plan
+    (sources.catalog), so that frame's shuffle no longer runs at build
+    time (10 jobs before).  The 7 left are the within-batch
+    connected_components: its eager edge checkpoint and bounded
+    toPandas head, which run the batch's LSH pair stages."""
+    assert _warm_build_jobs(spark, sf_dir, "dedup_increment") == 7

@@ -121,3 +121,109 @@ def test_dsl_size_window_uses_native_path(spark, tables):
     assert "FlatMapGroupsInPandas" not in plan
     assert df.count() > 0
     assert df.filter(F.col("n") != 3).count() == 0
+
+
+def _random_seq(spark, seed, *, null_values=False, null_keys=False,
+                n_keys=6):
+    import random
+    rng = random.Random(seed)
+    rows = []
+    for k in range(n_keys):
+        key = None if null_keys and k < 2 else f"u{k % 4}"
+        for i in range(rng.randint(0, 40)):
+            v = (None if null_values and rng.random() < 0.2
+                 else float(rng.randint(0, 200)))
+            # null keys share one sequence: keep their positions unique
+            rows.append((key, k * 100 + i, v))
+    return spark.createDataFrame(rows, "user_id string, pos int, value double")
+
+
+def _rows(df, part):
+    return sorted(
+        ((r.user_id is None, r.user_id or "") if part else (), r.s_at,
+         r.e_at, r.closed, tuple((w.pos, w.value) for w in r.window))
+        for r in df.collect())
+
+
+# (name, data options, operator options); thresholds 150/50 give a mix
+# of starts closing soon, late, at once and never
+_PARITY_CASES = [
+    ("sliding_only_end", dict(seed=1), dict(only_end=True)),
+    ("sliding_emit_open", dict(seed=2), dict(only_end=False)),
+    ("no_end_emit_open", dict(seed=3), dict(end=False, only_end=False)),
+    ("no_end_only_end", dict(seed=3), dict(end=False, only_end=True)),
+    ("null_values", dict(seed=4, null_values=True), dict(only_end=False)),
+    ("null_keys", dict(seed=5, null_keys=True), dict(only_end=False)),
+    ("global_sequence", dict(seed=6, n_keys=1), dict(part=False,
+                                                     only_end=False)),
+    ("tumbling_only_end", dict(seed=7), dict(tumbling=True,
+                                             only_end=True)),
+    ("tumbling_emit_open", dict(seed=8, null_values=True),
+     dict(tumbling=True, only_end=False)),
+]
+
+
+@pytest.mark.parametrize("data,opts", [c[1:] for c in _PARITY_CASES],
+                         ids=[c[0] for c in _PARITY_CASES])
+def test_column_predicates_match_arrow_path(spark, data, opts):
+    """Column conditions (JVM window functions when sliding, hidden
+    flag columns when tumbling) agree row for row, window contents
+    included, with the same conditions as Python callables on the
+    Arrow walker.  A null value fails both comparisons on both paths
+    (NULL counts as false; the walker sees NaN, which compares
+    false)."""
+    from pythonql_spark.plans import plan_report
+    df = _random_seq(spark, **data)
+    part = "user_id" if opts.get("part", True) else None
+    if part is None:
+        df = df.select("pos", "value")
+    has_end = opts.get("end", True)
+    kw = dict(order_by="pos", partition_by=part,
+              tumbling=opts.get("tumbling", False),
+              only_end=opts["only_end"])
+    native = predicate_windows(
+        df, start_when=F.col("value") > 150,
+        end_when=(F.col("value") < 50) if has_end else None, **kw)
+    arrow = predicate_windows(
+        df, start_when=lambda c, a, p, n: c["value"] > 150,
+        end_when=((lambda c, a, p, n, sc, sa: c["value"] < 50)
+                  if has_end else None), **kw)
+    assert native.schema.simpleString() == arrow.schema.simpleString()
+    got, want = _rows(native, part), _rows(arrow, part)
+    assert got == want
+    if not opts["only_end"]:
+        assert want, "case emits no window: it checks nothing"
+    rep = plan_report(native)
+    python_nodes = rep["python_arrow_evals"] + rep["python_row_evals"]
+    assert (python_nodes > 0) == kw["tumbling"]
+
+
+def test_column_windows_prune_window_column(spark):
+    """A caller that does not select ``window`` gets no per-key
+    collect_list and no join: Catalyst drops both."""
+    from pythonql_spark.plans import formatted_plan
+    df = _random_seq(spark, 9)
+    w = predicate_windows(df, order_by="pos",
+                          start_when=F.col("value") > 150,
+                          end_when=F.col("value") < 50,
+                          partition_by="user_id", only_end=True)
+    p = formatted_plan(w.select("user_id", "s_at", "e_at"))
+    assert "collect_list" not in p and "Join" not in p, p
+    assert "UNBOUNDED FOLLOWING" not in p.upper(), p
+    assert "collect_list" in formatted_plan(w)
+
+
+def test_column_windows_quote_value_names(spark):
+    df = spark.createDataFrame(
+        [("u", 0, 200.0), ("u", 1, 100.0), ("u", 2, 10.0)],
+        "user_id string, pos int, value double"
+    ).withColumnRenamed("value", "the `value`")
+    w = predicate_windows(df, order_by="pos",
+                          start_when=F.col("`the ``value```") > 150,
+                          end_when=F.col("`the ``value```") < 50,
+                          partition_by="user_id")
+    (row,) = w.collect()
+    assert (row.s_at, row.e_at, row.closed) == (0, 2, True)
+    assert [tuple(x) for x in row.window] == [(0, 200.0), (1, 100.0),
+                                              (2, 10.0)]
+    assert row.window[0].asDict() == {"pos": 0, "the `value`": 200.0}
