@@ -893,11 +893,12 @@ def pql_window(spark, sf):
     reference tests/tutorial_tests.py) through the pql() front-end,
     DISTRIBUTED: the query string is verbatim reference syntax; the
     env binds the source to a TableSeq (events partitioned by user,
-    event-time ordered), so the clause dispatches to
-    predicate_windows — per-key Arrow batches on executors, nothing
-    collected to the driver.  Every position opens a sliding window,
-    closed after 3 elements (`end at e when e - s == 2`), trailing
-    partial windows emitted.  Oracle: self-join on position range."""
+    event-time ordered), and the clause runs distributed per key,
+    nothing collected to the driver.  Every position opens a sliding
+    window, closed after 3 elements (`end at e when e - s == 2`),
+    trailing partial windows emitted: the count-based shape, which
+    compiles to native JVM frames (``fixed_windows``).  Oracle:
+    self-join on position range."""
     from pythonql_spark.pql import TableSeq, pql
     ev = load_table(spark, sf, "events").select("user_id", "ts", "value")
     return pql(spark, """
@@ -943,10 +944,11 @@ def stream_predicate(spark, sf):
     """The reference's TUMBLING predicate window clause through the
     UNIFIED stateful operator (streaming/stateful.py): open on
     value >= 150 (only if none open), absorb, close on value < 20, per
-    user in event-time order.  On this batch input the operator
-    dispatches to the declarative predicate_windows plan; on a stream
-    the identical call runs applyInPandasWithState with O(1) per-key
-    state (stream == batch parity is pytest-gated in
+    user in event-time order.  On this batch input the operator walks
+    each key with the window clause's loop (``window_clause.walk``) in
+    one mapInPandas and sums each window from its positions; on a
+    stream the identical call runs applyInPandasWithState with O(1)
+    per-key state (stream == batch parity is pytest-gated in
     tests/test_streaming.py).  The tumbling open/close recursion is
     SQL-expressible as a recursive CTE walking start→end→next-start
     per key, so this key carries a full value-hash oracle."""
@@ -4782,6 +4784,19 @@ def rag_retrieval(spark, sf):
                        id_col="chunk_id")
 
 
+def _per_token_w(dialect: str = "spark") -> str:
+    """``round(logweight / n_tokens, 6)`` in exact integer arithmetic:
+    ``M`` = logweight in millionths (it is already rounded to 6 dp),
+    then ``sign(M) * ((2|M| + n) div 2n)``, half away from zero.  As a
+    double division the two engines disagree on exact decimal ties:
+    Spark rounds the binary quotient half-up, DuckDB rounds it times
+    1e6, so −0.6473/40 became −0.016183 and −0.016182."""
+    m = "cast(round(logweight * 1000000) as bigint)"
+    div = "//" if dialect == "duck" else "div"
+    return (f"cast(sign({m}) * ((2 * abs({m}) + n_tokens) {div} "
+            f"(2 * n_tokens)) as double) / 1000000")
+
+
 @q("curation_pipeline", None)  # oracle attached below (generated SQL)
 def curation_pipeline(spark, sf):
     """Composite curation report over the round's new signals: Gopher
@@ -4806,8 +4821,7 @@ def curation_pipeline(spark, sf):
     spans = dup_span_stats(docs, k=5).select(
         "doc_id", "n_tokens", "dup_token_frac")
     w = dsir_logweights(docs, "lang = 'en'").select(
-        "doc_id", F.expr("cast(round(logweight / n_tokens, 6) as double)")
-        .alias("per_tok_w"))
+        "doc_id", F.expr(_per_token_w()).alias("per_tok_w"))
     keep = ("g_keep AND dup_token_frac < 0.3 AND "
             "per_tok_w > -0.35")
     return (g.join(spans, "doc_id").join(w, "doc_id")
@@ -5028,9 +5042,7 @@ WITH g AS (
   FROM documents),
 spans AS ({dup_span_stats_oracle_sql(k=5)}),
 w0 AS ({dsir_oracle_sql("lang = 'en'")}),
-w AS (SELECT doc_id,
-             cast(round(logweight / n_tokens, 6) as double) AS per_tok_w
-      FROM w0)
+w AS (SELECT doc_id, {_per_token_w('duck')} AS per_tok_w FROM w0)
 SELECT lang, cast(count(*) as bigint) AS n_docs,
        cast(sum(cast({keep} as int)) as bigint) AS n_kept,
        cast(sum(CASE WHEN {keep} THEN n_tokens ELSE 0 END) as bigint)

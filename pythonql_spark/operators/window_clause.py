@@ -11,25 +11,33 @@ and e_* variables).
 
 Spark-first shape: the sequence is a DataFrame partitioned by
 ``partition_by`` (one logical sequence per key — e.g. one per user)
-and ordered by ``order_by`` within the key.  A condition is either a
-Python callable or a pyspark ``Column``:
+and ordered by ``order_by`` within the key; one ``row_number``
+numbers it.  A window is the position range ``s_at..e_at`` of its
+key, and a condition is either a Python callable or a pyspark
+``Column``:
 
 * Callables (DSL lambdas, pql ``when`` strings) run in an Arrow walker
-  (``mapInPandas`` over key-sorted partitions) — distributed across
-  executors by key, never collected to the driver.
+  (``mapInPandas`` over the numbered rows, sorted by key and number)
+  — distributed across executors by key, never collected to the
+  driver.  :func:`key_runs` groups each key's rows and :func:`walk`,
+  the reference's loop, turns them into positions; the walker ships
+  back positions only, never rows.
 * A ``Column`` is a boolean over the sequence row's own columns; NULL
   counts as false.  When every condition is a Column and the window
   is sliding, the operator compiles to plain JVM window functions —
   no Python in the plan.  A Column cannot see neighbours or the
   window's start, so the next end position is the same for every
-  window open at a row: one ``row_number`` numbers the sequence, and
-  a running ``min(CASE WHEN end THEN rn END)`` over the key in
-  DESCENDING rn order (a running frame, linear per key) gives each
-  start its closing position.
+  window open at a row: a running ``min(CASE WHEN end THEN rn END)``
+  over the key in DESCENDING rn order (a running frame, linear per
+  key) gives each start its closing position.
 * Column conditions in a TUMBLING window (whose opens depend on the
   previous close), or mixed with a callable, are evaluated into hidden
-  boolean columns that the Arrow walker reads; they never appear in
-  the window structs.
+  boolean columns that the walker reads.
+
+Both paths then build ``window`` the same way, in the JVM
+(:func:`_with_window`): each key's rows in one sorted ``collect_list``,
+sliced at every window's positions — and pruned, with its join, when
+the caller does not select ``window``.
 
 For a single global sequence pass ``partition_by=None`` (all rows flow
 to one task; fine for bounded sequences, document the skew).
@@ -37,22 +45,126 @@ to one task; fine for bounded sequences, document the skew).
 
 from __future__ import annotations
 
-from typing import Callable
+from typing import Callable, Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+# the walker yields every ~_FLUSH_ROWS windows, so peak worker memory
+# is the largest key plus one flush buffer, not the partition's output
+_FLUSH_ROWS = 1 << 14
 
-def _norm_key(v):
-    """NaN/NaT → None so null partition keys compare equal (NaN != NaN
-    would splinter null-keyed rows into singleton groups).  Non-scalar
-    key values (arrays) pass through untouched."""
-    try:
-        return None if pd.isna(v) else v
-    except (TypeError, ValueError):
-        return v
+
+def walk(vals: list, start_when: Callable | None,
+         end_when: Callable | None = None, *, tumbling: bool = False,
+         only_end: bool = False, starts: list | None = None,
+         ends: list | None = None) -> list[tuple[int, int, bool]]:
+    """The reference's window loop over one key's sequence ``vals``:
+    every window as ``(s_at, e_at, closed)`` positions.
+    ``start_when(curr, at, prev, nxt)`` /
+    ``end_when(curr, at, prev, nxt, s_curr, s_at)`` are called on the
+    elements of ``vals``; a per-row flag list ``starts`` / ``ends``
+    (a Column condition the JVM evaluated) replaces its callable."""
+    n = len(vals)
+    out: list[tuple[int, int, bool]] = []
+    open_: list[int] = []
+    for i, curr in enumerate(vals):
+        prev = vals[i - 1] if i else None
+        nxt = vals[i + 1] if i + 1 < n else None
+        if (not tumbling or not open_) and (
+                starts[i] if starts is not None
+                else start_when(curr, i, prev, nxt)):
+            open_.append(i)
+        still = []
+        for s in open_:
+            if (ends[i] if ends is not None else end_when
+                    and end_when(curr, i, prev, nxt, vals[s], s)):
+                out.append((s, i, True))
+            else:
+                still.append(s)
+        open_ = still
+    if not only_end:
+        out += [(s, n - 1, False) for s in open_]
+    return out
+
+
+def key_runs(batches: Iterable[pd.DataFrame], part: list[str],
+             columns: Callable[[pd.DataFrame], dict[str, list]]
+             ) -> Iterator[tuple[tuple, dict[str, list]]]:
+    """Walks key-sorted pandas batches (a ``mapInPandas`` input) and
+    yields one ``(key, cols)`` per run of equal ``part`` values: the
+    key as a tuple, and each of ``columns(pdf)``'s lists cut to the
+    run.  ``columns`` is called once per batch, so per-row Python
+    values are made once, not per key.  A key's rows arrive
+    contiguously but may span batches; its run is yielded once it is
+    complete.  Null keys (NaN/NaT after Arrow) become None, so they
+    group together as in ``groupBy`` — NaN != NaN would splinter them
+    into one-row runs."""
+    key = cols = None
+    for pdf in batches:
+        n = len(pdf)
+        if not n:
+            continue
+        lists = columns(pdf)
+        kcols = [pdf[k] for k in part]
+        keys = (list(zip(*[c.astype(object).where(c.notna(), None).tolist()
+                           if c.hasnans else c.tolist() for c in kcols]))
+                if part else [()] * n)
+        start = 0
+        for i in range(1, n + 1):
+            if i < n and keys[i] == keys[start]:
+                continue
+            if cols is not None and keys[start] == key:
+                for name, acc in cols.items():
+                    acc.extend(lists[name][start:i])
+            else:
+                if cols is not None:
+                    yield key, cols
+                key = keys[start]
+                cols = {name: v[start:i] for name, v in lists.items()}
+            start = i
+    if cols is not None:
+        yield key, cols
+
+
+def _numbered(df: DataFrame, part: list[str], order: list[str]) -> DataFrame:
+    """``df`` with ``__rn``: each row's 0-based position in its key's
+    sequence.  The walker's positions and :func:`_with_window`'s slice
+    both index this one numbering, so they agree even when
+    ``order_by`` has ties (which number arbitrarily, as for any
+    ``row_number``)."""
+    from pyspark.sql.window import Window as W
+    return df.withColumn("__rn", (F.row_number().over(
+        W.partitionBy(*part).orderBy(*order)) - 1).cast("long"))
+
+
+def _window_key(part: list[str]) -> Column:
+    # struct equality matches null keys, as the walker groups them
+    return F.struct(*part) if part else F.lit(0)
+
+
+def _with_window(seq: DataFrame, wins: DataFrame, part: list[str],
+                 value_names: list[str]) -> DataFrame:
+    """Adds ``window`` to ``wins`` (partition keys, ``__k`` =
+    :func:`_window_key`, ``s_at``, ``e_at``, ``closed``): the values of
+    ``seq``'s rows ``s_at..e_at`` of the key, in ``__rn`` order.  The
+    key's whole sequence is one sorted ``collect_list`` (the per-key
+    memory contract of the reference's loop), joined back on ``__k``
+    against a frame grouped by it, so when the caller does not select
+    ``window`` Catalyst drops the join and the collect entirely."""
+    # the higher-order functions as SQL text: Python lambdas cost
+    # several JVM round trips each at build time
+    values = ", ".join("`" + c.replace("`", "``") + "`" for c in value_names)
+    whole = seq.groupBy(_window_key(part).alias("__k")).agg(F.expr(
+        f"array_sort(collect_list(struct(__rn AS rn, struct({values}) AS v)),"
+        " (a, b) -> CASE WHEN a.rn < b.rn THEN -1"
+        " WHEN a.rn > b.rn THEN 1 ELSE 0 END)").alias("__seq"))
+    window = F.expr("transform(slice(__seq, s_at + 1, e_at - s_at + 1), "
+                    "x -> x.v)")
+    return (wins.join(whole, "__k", "left")
+            .select(*part, window.alias("window"), "s_at", "e_at", "closed"))
 
 
 def predicate_windows(
@@ -77,15 +189,15 @@ def predicate_windows(
     NULL counting as false; all-Column sliding windows run as JVM
     window functions (:func:`_column_sliding_windows`), anything else
     through the Arrow walker, Column conditions as hidden flag
-    columns.  ``end_when=None`` closes no window.
+    columns.  ``end_when=None`` closes no window.  ``order_by``
+    should be a total order: ties number arbitrarily.
     """
     part = [partition_by] if isinstance(partition_by, str) else (partition_by or [])
     order = [order_by] if isinstance(order_by, str) else list(order_by)
     hidden = set(exclude_from_window or [])
 
-    value_fields = [f for f in df.schema.fields
-                    if f.name not in part and f.name not in hidden]
-    value_names = [f.name for f in value_fields]
+    value_names = [f.name for f in df.schema.fields
+                   if f.name not in part and f.name not in hidden]
     single = value_names[0] if len(value_names) == 1 else None
 
     conds = [c for c in (start_when, end_when) if c is not None]
@@ -94,135 +206,61 @@ def predicate_windows(
                                        start_when, end_when, only_end)
     # Column conditions on the walker path: one hidden boolean per
     # row, read by the walker instead of a call (and kept out of the
-    # walker's closure: a Column does not pickle)
-    start_flag = end_flag = None
+    # walker's closure: a Column does not pickle); keyed by walk's
+    # flag-list argument
+    flags = {}
     if isinstance(start_when, Column):
-        start_flag = "__pw_start"
-        df = df.withColumn(start_flag, F.coalesce(start_when, F.lit(False)))
+        flags["starts"] = F.coalesce(start_when, F.lit(False))
         start_when = None
     if isinstance(end_when, Column):
-        end_flag = "__pw_end"
-        df = df.withColumn(end_flag, F.coalesce(end_when, F.lit(False)))
+        flags["ends"] = F.coalesce(end_when, F.lit(False))
         end_when = None
+    # the rows go to the worker only when a callable reads them
+    shipped = value_names if start_when or end_when else []
+    flag_names = list(flags)
 
-    out_schema = T.StructType(
-        [f for f in df.schema.fields if f.name in part]
-        + [
-            T.StructField("window", T.ArrayType(T.StructType(value_fields))),
-            T.StructField("s_at", T.LongType()),
-            T.StructField("e_at", T.LongType()),
-            T.StructField("closed", T.BooleanType()),
-        ]
-    )
+    def columns(pdf: pd.DataFrame) -> dict[str, list]:
+        if not shipped:
+            vals = [None] * len(pdf)
+        elif single:
+            vals = pdf[single].tolist()
+        else:
+            vals = pdf[shipped].to_dict("records")
+        return {"vals": vals,
+                **{f: pdf[f"__pw_{f}"].tolist() for f in flag_names}}
 
-    def run(pdf: pd.DataFrame, presorted: bool = False) -> pd.DataFrame:
-        if not presorted:
-            pdf = pdf.sort_values(order, kind="mergesort")
-        keys = {k: pdf.iloc[0][k] for k in part} if part else {}
-        rows = pdf[value_names].to_dict("records")
-        vals = [r[single] if single else r for r in rows]
-        starts = pdf[start_flag].tolist() if start_flag else None
-        ends = pdf[end_flag].tolist() if end_flag else None
-        n = len(vals)
+    names = [*part, "s_at", "e_at", "closed"]
+
+    def gen(batches):
         out = []
-        open_ws: list[dict] = []
-        for i in range(n):
-            prev = vals[i - 1] if i > 0 else None
-            nxt = vals[i + 1] if i + 1 < n else None
-            if not tumbling or not open_ws:
-                if (starts[i] if starts is not None
-                        else start_when(vals[i], i, prev, nxt)):
-                    open_ws.append({"rows": [], "s_at": i, "s_curr": vals[i]})
-            still = []
-            for w in open_ws:
-                w["rows"].append(rows[i])
-                if ends is not None:
-                    closes = ends[i]
-                else:
-                    closes = end_when and end_when(vals[i], i, prev, nxt,
-                                                   w["s_curr"], w["s_at"])
-                if closes:
-                    out.append({**keys, "window": w["rows"],
-                                "s_at": w["s_at"], "e_at": i, "closed": True})
-                else:
-                    still.append(w)
-            open_ws = still
-        if not only_end:
-            for w in open_ws:
-                out.append({**keys, "window": w["rows"],
-                            "s_at": w["s_at"], "e_at": n - 1, "closed": False})
-        return pd.DataFrame(out, columns=[*part, "window", "s_at", "e_at", "closed"])
+        for key, cols in key_runs(batches, part, columns):
+            out += [(*key, *w) for w in walk(
+                cols["vals"], start_when, end_when, tumbling=tumbling,
+                only_end=only_end, starts=cols.get("starts"),
+                ends=cols.get("ends"))]
+            if len(out) >= _FLUSH_ROWS:
+                yield pd.DataFrame.from_records(out, columns=names)
+                out = []
+        if out:
+            yield pd.DataFrame.from_records(out, columns=names)
 
-    if part:
-        # Batch dispatch, not per-key applyInPandas: FlatMapGroupsInPandas
-        # ships ONE Arrow batch per key — ruinous at high key cardinality
-        # (a no-op over 1500 keys costs ~4 s at sf0.1; see
-        # streaming/stateful.py where this was first measured).  Instead
-        # repartition+sort by key and walk sorted runs inside mapInPandas:
-        # one Arrow transfer per core, one output frame per partition.  A
-        # key's rows arrive contiguously but may span Arrow batches, so
-        # the current key buffers across the boundary.
-        out_cols = [*part, "window", "s_at", "e_at", "closed"]
-        # Yield incrementally (every ~_FLUSH_ROWS output rows) so peak
-        # worker memory is bounded by the largest single key plus one
-        # flush buffer, not the whole partition's output.
-        _FLUSH_ROWS = 1 << 14
-
-        def gen(batches):
-            pending: list[pd.DataFrame] = []
-            pending_rows = 0
-            buf: list[pd.DataFrame] = []
-            buf_key = None
-
-            def flush():
-                nonlocal pending_rows
-                if buf:
-                    pdf = (pd.concat(buf, ignore_index=True)
-                           if len(buf) > 1 else buf[0])
-                    res = run(pdf, presorted=True)
-                    if len(res):
-                        pending.append(res)
-                        pending_rows += len(res)
-
-            def drain():
-                nonlocal pending_rows
-                if pending:
-                    out = (pd.concat(pending, ignore_index=True)
-                           if len(pending) > 1 else pending[0])
-                    pending.clear()
-                    pending_rows = 0
-                    yield out[out_cols]
-
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                # Null partition keys: NaN != NaN would splinter every
-                # null-keyed row into its own group — normalise to None
-                # so nulls group together (matching groupBy semantics).
-                keys = [tuple(_norm_key(v) for v in row)
-                        for row in
-                        pdf[part].itertuples(index=False, name=None)]
-                start = 0
-                for i in range(1, len(keys) + 1):
-                    if i == len(keys) or keys[i] != keys[start]:
-                        chunk = pdf.iloc[start:i]
-                        if buf_key is not None and keys[start] == buf_key:
-                            buf.append(chunk)
-                        else:
-                            flush()
-                            if pending_rows >= _FLUSH_ROWS:
-                                yield from drain()
-                            buf, buf_key = [chunk], keys[start]
-                        start = i
-            flush()
-            yield from drain()
-
-        return (df.repartition(*part)
-                .sortWithinPartitions(*part, *order)
-                .mapInPandas(gen, out_schema))
-    # single global sequence: one group (bounded-size sequences only)
-    return (df.withColumn("__g", F.lit(1)).groupBy("__g")
-            .applyInPandas(lambda pdf: run(pdf.drop(columns="__g")), out_schema))
+    schema = T.StructType(
+        [f for f in df.schema.fields if f.name in part]
+        + [T.StructField("s_at", T.LongType()),
+           T.StructField("e_at", T.LongType()),
+           T.StructField("closed", T.BooleanType())])
+    # the numbering window hash-partitions by key (one partition when
+    # there is none), so each key's rows are in one partition; sorted
+    # by key and number, they walk as contiguous runs.  One Arrow
+    # transfer per partition, not one per key as a grouped
+    # applyInPandas would (a no-op over 1500 keys costs ~4 s at sf0.1)
+    seq = _numbered(df, part, order)
+    wins = (seq.sortWithinPartitions(*part, "__rn")
+            .select(*part, *shipped,
+                    *[c.alias(f"__pw_{f}") for f, c in flags.items()])
+            .mapInPandas(gen, schema)
+            .withColumn("__k", _window_key(part)))
+    return _with_window(seq, wins, part, value_names)
 
 
 def _column_sliding_windows(df: DataFrame, order: list[str],
@@ -230,52 +268,32 @@ def _column_sliding_windows(df: DataFrame, order: list[str],
                             start: Column, end: Column | None,
                             only_end: bool) -> DataFrame:
     """Sliding windows whose conditions are Columns, as JVM window
-    functions.  ``s_at`` is the row's ``row_number() - 1``; a window
-    opened at ``s_at`` closes at the first position >= ``s_at`` where
-    ``end`` holds: the running ``min(CASE WHEN end THEN rn END)`` over
-    the key ordered by rn DESCENDING, ``ROWS BETWEEN UNBOUNDED
-    PRECEDING AND CURRENT ROW``.  (The ascending ``CURRENT ROW AND
-    UNBOUNDED FOLLOWING`` frame gives the same value but re-aggregates
-    the rest of the key for every row: quadratic per key.)
-
-    ``window`` slices the key's whole sequence — one sorted
-    ``collect_list`` per key, the walker's per-key memory contract —
-    joined back on the key.  The join is on a struct of the partition
-    columns (struct equality matches null keys, as the walker groups
-    them) against a frame grouped by that struct, so when the caller
-    does not select ``window`` Catalyst drops the join and the
-    collect entirely.  ``order_by`` should be a total order, as for
-    any ``row_number``: ties number arbitrarily."""
+    functions.  ``s_at`` is the row's ``__rn``; a window opened at
+    ``s_at`` closes at the first position >= ``s_at`` where ``end``
+    holds: the running ``min(CASE WHEN end THEN rn END)`` over the key
+    ordered by rn DESCENDING, ``ROWS BETWEEN UNBOUNDED PRECEDING AND
+    CURRENT ROW``.  (The ascending ``CURRENT ROW AND UNBOUNDED
+    FOLLOWING`` frame gives the same value but re-aggregates the rest
+    of the key for every row: quadratic per key.)"""
     from pyspark.sql.window import Window as W
 
-    by = W.partitionBy(*part)
     rn = F.col("__rn")
-    seq = df.withColumn("__rn", (F.row_number().over(by.orderBy(*order))
-                                 - 1).cast("long"))
-    back = by.orderBy(rn.desc()).rowsBetween(W.unboundedPreceding,
-                                              W.currentRow)
+    seq = _numbered(df, part, order)
+    back = W.partitionBy(*part).orderBy(rn.desc()).rowsBetween(
+        W.unboundedPreceding, W.currentRow)
     # a NULL condition fails both CASE WHEN and the filter
     next_end = (F.min(F.when(end, rn)).over(back) if end is not None
                 else F.lit(None).cast("long"))
-    key = F.struct(*part) if part else F.lit(0)
     closed = F.col("__end").isNotNull()
     # few DataFrame steps: each one is analyzed while the plan is built
     wins = (seq.select("*", next_end.alias("__end"),
-                       F.max(rn).over(back).alias("__last"), key.alias("__k"))
-            .filter(start & closed if only_end else start))
-    # the higher-order functions as SQL text: Python lambdas cost
-    # several JVM round trips each at build time
-    values = ", ".join("`" + c.replace("`", "``") + "`" for c in value_names)
-    whole = seq.groupBy(key.alias("__k")).agg(F.expr(
-        f"array_sort(collect_list(struct(__rn AS rn, struct({values}) AS v)),"
-        " (a, b) -> CASE WHEN a.rn < b.rn THEN -1"
-        " WHEN a.rn > b.rn THEN 1 ELSE 0 END)").alias("__seq"))
-    e_at = F.coalesce("__end", "__last")
-    window = F.expr("transform(slice(__seq, __rn + 1, "
-                    "coalesce(__end, __last) - __rn + 1), x -> x.v)")
-    return (wins.join(whole, "__k", "left")
-            .select(*part, window.alias("window"), rn.alias("s_at"),
-                    e_at.alias("e_at"), closed.alias("closed")))
+                       F.max(rn).over(back).alias("__last"),
+                       _window_key(part).alias("__k"))
+            .filter(start & closed if only_end else start)
+            .select(*part, "__k", rn.alias("s_at"),
+                    F.coalesce("__end", "__last").alias("e_at"),
+                    closed.alias("closed")))
+    return _with_window(seq, wins, part, value_names)
 
 
 def fixed_windows(

@@ -52,9 +52,12 @@ class TableSeq:
     single ``value`` column (default: the one column that is neither
     a key nor an ordering column).  This is the distributed form of
     the reference's window-over-a-sequence — the string syntax stays
-    verbatim, the env carries the partitioning, and the clause
-    dispatches to operators.window_clause.predicate_windows (per-key
-    Arrow batches, never collected to the driver)."""
+    verbatim, the env carries the partitioning, and the clause runs
+    per key, never collected to the driver: count-based windows as
+    native JVM frames (operators.window_clause.fixed_windows), any
+    other as operators.window_clause.predicate_windows, whose Arrow
+    walker returns window positions and whose ``window`` is sliced in
+    the JVM."""
 
     def __init__(self, df: DataFrame, order_by, partition_by=None,
                  value: str | None = None):

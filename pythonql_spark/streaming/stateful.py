@@ -7,6 +7,12 @@ Design for scale: state is per-key and O(1) per open session (start,
 last-seen, count, sum — never the raw events), keys are hash-
 partitioned across executors by the groupBy, and event-time timeout +
 watermark bound state size under late data.
+
+Spark runs applyInPandasWithState on streams only.  On batch input
+``stateful_predicate_windows`` walks each key with the batch window
+walker (``operators.window_clause.key_runs`` / ``walk``) in one
+``mapInPandas``, and ``stateful_sessionize`` runs JVM window
+functions.
 """
 
 from __future__ import annotations
@@ -75,132 +81,70 @@ def stateful_predicate_windows(
     exactly what an unbounded stream cannot state-bound.
 
     BATCH input (Spark rejects applyInPandasWithState outside
-    streaming) dispatches to the batch ``predicate_windows`` operator
-    with identical semantics — end-of-input plays the role of the
-    timeout, so with ``only_end=False`` the trailing open window is
-    emitted, same as the stream's timeout flush.  Conditions written
-    against ``value``/indexes (per the contract above) behave
-    identically on both paths."""
+    streaming) runs the batch walker's loop instead: the events are
+    hash-partitioned by key and sorted by key and event time, and one
+    ``mapInPandas`` walks each key with
+    ``window_clause.key_runs`` / ``window_clause.walk``.  End-of-input
+    plays the role of the timeout, so with ``only_end=False`` the
+    trailing open window is emitted, same as the stream's timeout
+    flush.  Batch conditions additionally see the real ``nxt`` row (a
+    stream has no lookahead); conditions written against
+    ``value``/indexes (per the contract above) behave identically on
+    both paths."""
     from ..helpers import ensure_event_time
 
     events = ensure_event_time(events, [ts_col])
     out_cols = [key_col, "s_at", "e_at", "s_ts", "e_ts",
                 "n_events", "sum_value"]
-    if not events.isStreaming:
-        # Batch dispatch (Spark rejects applyInPandasWithState outside
-        # streaming): the SAME scalar-state loop as the stream path,
-        # over key-repartitioned + key-sorted partitions via
-        # mapInPandas.  Two prior shapes were measured and rejected at
-        # sf0.1 (100k events / 1500 keys): window arrays-of-structs
-        # via predicate_windows + F.aggregate (7.5s) and per-key
-        # applyInPandas (11.8s — groupBy.applyInPandas ships one Arrow
-        # batch PER KEY, and 1500 tiny batches cost ~4s even for a
-        # no-op).  mapInPandas processes whole sorted partitions —
-        # ~n_cores Arrow transfers total (1.3s).  Batch conditions
-        # additionally see the real ``nxt`` row (a stream has no
-        # lookahead), per the operator contract.
-        import pandas as _pd
-        from pyspark.sql import types as T
-
-        key_pd = _KEY_PD_DTYPE.get(_key_sql_type(events, key_col),
-                                   "object")
-        schema = T.StructType([
-            events.schema[key_col],
-            T.StructField("s_at", T.LongType()),
-            T.StructField("e_at", T.LongType()),
-            T.StructField("s_ts", T.TimestampType()),
-            T.StructField("e_ts", T.TimestampType()),
-            T.StructField("n_events", T.LongType()),
-            T.StructField("sum_value", T.DoubleType()),
-        ])
-
-        def _key_windows(k, ts_us, vals):
-            n_rows = len(vals)
-            dicts = [{"ts": t, "value": v} for t, v in zip(ts_us, vals)]
-            closed = []
-            open_, s_at, s_start, n, s = False, 0, None, 0, 0.0
-            for i in range(n_rows):
-                curr = dicts[i]
-                prev = dicts[i - 1] if i > 0 else None
-                nxt = dicts[i + 1] if i + 1 < n_rows else None
-                if not open_ and start_when(curr, i, prev, nxt):
-                    open_, s_at, s_start, n, s = True, i, curr, 0, 0.0
-                if open_:
-                    n += 1
-                    s += vals[i]
-                    if end_when(curr, i, prev, nxt, s_start, s_at):
-                        closed.append((k, s_at, i, s_start["ts"],
-                                       ts_us[i], n, s))
-                        open_ = False
-            if open_ and not only_end:
-                closed.append((k, s_at, n_rows - 1, s_start["ts"],
-                               ts_us[-1], n, s))
-            return closed
-
-        def _frame(closed):
-            # explicit dtypes: an empty chunk must still ship
-            # Arrow-compatible columns (bare [] defaults to float64,
-            # which can't cast to timestamp)
-            return _pd.DataFrame({
-                key_col: _pd.Series([c[0] for c in closed],
-                                    dtype=key_pd),
-                "s_at": _pd.Series([c[1] for c in closed],
-                                   dtype="int64"),
-                "e_at": _pd.Series([c[2] for c in closed],
-                                   dtype="int64"),
-                "s_ts": _pd.Series(
-                    [_pd.Timestamp(c[3] * 1000) for c in closed],
-                    dtype="datetime64[ns]"),
-                "e_ts": _pd.Series(
-                    [_pd.Timestamp(c[4] * 1000) for c in closed],
-                    dtype="datetime64[ns]"),
-                "n_events": _pd.Series([c[5] for c in closed],
-                                       dtype="int64"),
-                "sum_value": _pd.Series([c[6] for c in closed],
-                                        dtype="float64"),
-            }, columns=out_cols)
-
-        def gen(batches):
-            # sorted-run grouping: a key's rows arrive contiguously
-            # (partition sorted on key) but may span Arrow batches —
-            # buffer the current key across batch boundaries.  Closed
-            # windows accumulate and ship as ONE output frame per
-            # partition: yielding per key costs one Arrow batch each
-            # (1500 keys ≈ +4s at sf0.1, measured)
-            out: list = []
-            buf_key, buf_ts, buf_vals = None, [], []
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                ts_us = (pdf[ts_col].astype("int64") // 1000).tolist()
-                vals = pdf[value_col].astype("float64").tolist()
-                keys = pdf[key_col].tolist()
-                start = 0
-                for i in range(1, len(keys) + 1):
-                    if i == len(keys) or keys[i] != keys[start]:
-                        if buf_key is not None and keys[start] == buf_key:
-                            buf_ts += ts_us[start:i]
-                            buf_vals += vals[start:i]
-                        else:
-                            if buf_key is not None:
-                                out += _key_windows(
-                                    buf_key, buf_ts, buf_vals)
-                            buf_key = keys[start]
-                            buf_ts = ts_us[start:i]
-                            buf_vals = vals[start:i]
-                        start = i
-            if buf_key is not None:
-                out += _key_windows(buf_key, buf_ts, buf_vals)
-            yield _frame(out)
-
-        return (events.select(key_col, ts_col, value_col)
-                .repartition(key_col)
-                .sortWithinPartitions(key_col, ts_col, value_col)
-                .mapInPandas(gen, schema))
     out_schema = (f"{key_col} {_key_sql_type(events, key_col)}, "
                   f"s_at long, e_at long, "
                   f"s_ts timestamp, e_ts timestamp, "
                   f"n_events long, sum_value double")
+    if not events.isStreaming:
+        # one mapInPandas over key-sorted partitions: ~n_cores Arrow
+        # transfers in all.  Measured at sf0.1 (100k events / 1500
+        # keys) against windows built as arrays of structs and folded
+        # with F.aggregate (7.5 s) and per-key applyInPandas (11.8 s:
+        # one Arrow batch PER KEY costs ~4 s even for a no-op): 1.3 s
+        from ..operators.window_clause import key_runs, walk
+
+        key_pd = _KEY_PD_DTYPE.get(_key_sql_type(events, key_col),
+                                   "object")
+
+        def columns(pdf):
+            # per-row Python values once per batch, not per key
+            ts_us = (pdf[ts_col].astype("int64") // 1000).tolist()
+            vals = pdf[value_col].astype("float64").tolist()
+            return {"ts": ts_us, "vals": vals,
+                    "rows": [{"ts": t, "value": v}
+                             for t, v in zip(ts_us, vals)]}
+
+        def gen(batches):
+            # closed windows ship as ONE output frame per partition:
+            # yielding per key costs one Arrow batch each (1500 keys
+            # ≈ +4 s at sf0.1, measured)
+            out = []
+            for (k,), cols in key_runs(batches, [key_col], columns):
+                ts, vals = cols["ts"], cols["vals"]
+                out += [(k, s, e, ts[s], ts[e], e - s + 1,
+                         sum(vals[s:e + 1]))
+                        for s, e, _ in walk(cols["rows"], start_when,
+                                            end_when, tumbling=True,
+                                            only_end=only_end)]
+            # explicit dtypes: an empty frame must still ship
+            # Arrow-compatible columns (an empty object column cannot
+            # cast to timestamp)
+            frame = pd.DataFrame.from_records(out, columns=out_cols).astype(
+                {key_col: key_pd, "s_at": "int64", "e_at": "int64",
+                 "n_events": "int64", "sum_value": "float64"})
+            for c in ("s_ts", "e_ts"):
+                frame[c] = pd.to_datetime(frame[c], unit="us")
+            yield frame
+
+        return (events.select(key_col, ts_col, value_col)
+                .repartition(key_col)
+                .sortWithinPartitions(key_col, ts_col, value_col)
+                .mapInPandas(gen, out_schema))
     state_schema = ("idx long, open boolean, s_at long, s_ts long, "
                     "s_val double, n long, s double, "
                     "prev_ts long, prev_val double, has_prev boolean")

@@ -15,6 +15,13 @@ Usage:
 Interpretation: identical code measures ratio 1.0 +/- ~0.1; treat
 anything inside [0.85, 1.15] as noise.  Medians over 2*reps runs.
 
+The timed action is a full materialization, a write of every row to
+Spark's ``noop`` sink (:func:`materialize`), as ``perfbench/run.py``
+times its items.  ``count()`` is not: Catalyst prunes from a count
+plan every column the count does not need, and with them projections,
+Python UDFs and joins that only add columns, so a change to those
+would not show.
+
 Python workers import the package from ``PYTHONPATH``, not from the
 driver's ``sys.path``.  Before each side builds its plan, the harness
 points ``sparkContext.environment["PYTHONPATH"]`` at that side's
@@ -69,6 +76,12 @@ def load_queries(spark, path: str):
         sys.path.pop(0)
 
 
+def materialize(df) -> None:
+    """Runs ``df`` to the end: every row, every column, nothing
+    collected to the driver."""
+    df.write.format("noop").mode("overwrite").save()
+
+
 def main() -> None:
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     pre_path, keys = args[0], args[1:]
@@ -88,21 +101,21 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     # warm the worker pool the way bench.py does
-    load_queries(spark, paths["A"])["group_agg"](spark, sf_dir).count()
+    materialize(load_queries(spark, paths["A"])["group_agg"](spark, sf_dir))
     from pyspark.sql import functions as F
-    spark.range(64).select(
-        F.pandas_udf(lambda s: s * 2, "long")(F.col("id"))).count()
+    materialize(spark.range(64).select(
+        F.pandas_udf(lambda s: s * 2, "long")(F.col("id"))))
 
     res = {k: {"A": [], "B": []} for k in keys}
     for k in keys:
         for v in ("A", "B"):                      # warm both variants
-            load_queries(spark, paths[v])[k](spark, sf_dir).count()
+            materialize(load_queries(spark, paths[v])[k](spark, sf_dir))
         for rep in range(reps):
             order = ("A", "B") if rep % 2 == 0 else ("B", "A")
             for v in order:
                 q = load_queries(spark, paths[v])[k]
                 t0 = time.perf_counter()
-                q(spark, sf_dir).count()
+                materialize(q(spark, sf_dir))
                 res[k][v].append(time.perf_counter() - t0)
         a = statistics.median(res[k]["A"])
         b = statistics.median(res[k]["B"])

@@ -14,14 +14,19 @@ import pandas as pd
 SCRIPT = Path(__file__).resolve().parent.parent / "scripts" / "ab_interleave.py"
 
 
+def _harness():
+    spec = importlib.util.spec_from_file_location("ab_interleave", SCRIPT)
+    ab = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(ab)
+    return ab
+
+
 def test_worker_imports_the_sides_checkout(spark, tmp_path):
     pkg = tmp_path / "baseline" / "pythonql_spark"
     pkg.mkdir(parents=True)
     (pkg / "__init__.py").write_text("")
     (pkg / "benchqueries.py").write_text("QUERIES = {}\n")
-    spec = importlib.util.spec_from_file_location("ab_interleave", SCRIPT)
-    ab = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(ab)
+    ab = _harness()
 
     env = spark.sparkContext.environment
     saved_env = dict(env)
@@ -44,3 +49,22 @@ def test_worker_imports_the_sides_checkout(spark, tmp_path):
         env.clear()
         env.update(saved_env)
     assert got == {str(pkg / "__init__.py")}
+
+
+def test_timed_action_runs_pruned_projections(spark):
+    """The harness times a full materialization: a Python UDF in a
+    projection that ``count()`` prunes still runs once per row."""
+    from pyspark.sql import functions as F
+
+    calls = spark.sparkContext.accumulator(0)
+
+    @F.udf("long")
+    def touch(x):
+        calls.add(1)
+        return x
+
+    df = spark.range(50).select("id", touch("id").alias("t"))
+    df.count()
+    assert calls.value == 0, "count() ran the UDF: the test shows nothing"
+    _harness().materialize(df)
+    assert calls.value == 50

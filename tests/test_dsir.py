@@ -110,3 +110,28 @@ def test_resample_tolerates_existing_weight_columns(corpus):
     # without collisions the weight columns are appended as before
     plain = dsir_resample(corpus, "kind = 'wiki'", rate=0.6)
     assert {"n_tokens", "logweight"} <= set(plain.columns)
+
+
+def test_per_token_weight_rounds_alike_in_spark_and_duckdb(spark):
+    """``curation_pipeline``'s ``round(logweight / n_tokens, 6)`` is
+    exact integer arithmetic in both dialects: as a double division
+    Spark and DuckDB round exact decimal ties differently (−0.6473/40
+    gave −0.016183 and −0.016182)."""
+    import duckdb
+    from pyspark.sql import functions as F
+
+    from pythonql_spark.benchqueries import _per_token_w
+    rows = [(-0.6473, 40), (0.6473, 40), (-0.000005, 1), (0.000001, 2),
+            (-0.000001, 2), (-12.345678, 7), (0.0, 3)]
+    want = [-0.016183, 0.016183, -0.000005, 0.000001, -0.000001,
+            -1.763668, 0.0]
+    got = [r[0] for r in spark.createDataFrame(
+        rows, "logweight double, n_tokens long").select(
+            F.expr(_per_token_w())).collect()]
+    values = ", ".join(f"({lw}, {n})" for lw, n in rows)
+    duck = [r[0] for r in duckdb.sql(
+        f"SELECT {_per_token_w('duck')} FROM (SELECT cast(lw AS double)"
+        " AS logweight, cast(n AS bigint) AS n_tokens"
+        f" FROM (VALUES {values}) t(lw, n))").fetchall()]
+    assert got == want
+    assert duck == want

@@ -13,7 +13,7 @@ import pytest
 from pythonql_spark.benchqueries import QUERIES
 
 
-from pythonql_spark.plans import formatted_plan
+from pythonql_spark.plans import formatted_plan, plan_report
 from test_session import PQL_KEYS
 
 
@@ -666,6 +666,35 @@ def test_window_predicate_native_shape(spark, sf_dir):
     assert "collect_list" not in p, p
     assert not re.search(r"currentrow\$\(\), unboundedfollowing", p), p
     assert "row_number" in p, p
+
+
+def _physical_nodes(df):
+    """Every node of ``df``'s physical plan as planned, before
+    exchanges are inserted (JVM objects)."""
+    todo = [df._jdf.queryExecution().sparkPlan()]
+    while todo:
+        node = todo.pop()
+        yield node
+        kids = node.children()
+        todo += [kids.apply(i) for i in range(kids.size())]
+
+
+@pytest.mark.parametrize("key", ["window_aux", "stream_predicate"])
+def test_predicate_walker_ships_positions(spark, sf_dir, key):
+    """The callable-condition walker is one ``mapInPandas`` that returns
+    window positions, never rows: no array in its output.  The walker
+    reads the key-hashed rows of one exchange, and ``window_aux``,
+    which does not select ``window``, plans no per-key list."""
+    df = QUERIES[key](spark, sf_dir)
+    walkers = [n for n in _physical_nodes(df)
+               if n.nodeName() == "MapInPandas"]
+    assert len(walkers) == 1, [n.nodeName() for n in _physical_nodes(df)]
+    out = walkers[0].schema().simpleString()
+    assert "array<" not in out, out
+    p = formatted_plan(df)
+    assert plan_report(df)["exchanges"] == 1, p
+    if key == "window_aux":
+        assert "collect_list" not in p, p
 
 
 def test_dedup_increment_build_jobs(spark, sf_dir):

@@ -1,7 +1,7 @@
 """Predicate/fixed window clause tests (reference Executor.py:568-638).
 
 The key property: fixed_windows (native JVM window frames) must agree
-ROW-FOR-ROW with predicate_windows (the general applyInPandas path)
+ROW-FOR-ROW with predicate_windows (the general Arrow walker)
 whenever the predicates express a fixed count — they are two physical
 strategies for one operator."""
 
@@ -196,6 +196,31 @@ def test_column_predicates_match_arrow_path(spark, data, opts):
     rep = plan_report(native)
     python_nodes = rep["python_arrow_evals"] + rep["python_row_evals"]
     assert (python_nodes > 0) == kw["tumbling"]
+
+
+@pytest.mark.parametrize("tumbling", [False, True],
+                         ids=["sliding", "tumbling"])
+def test_tied_order_windows_hold_their_rows(spark, tumbling):
+    """``order_by`` with ties numbers the tied rows arbitrarily, but
+    once: the walker's positions and the slice that builds ``window``
+    index the same numbering, so every window holds ``e_at - s_at + 1``
+    rows, opens on a row where the start condition holds and, closed,
+    ends on one where the end condition holds."""
+    import random
+    rng = random.Random(10)
+    rows = [(f"u{k}", i // 3, float(rng.randint(0, 200)))
+            for k in range(4) for i in range(rng.randint(10, 40))]
+    df = spark.createDataFrame(rows, "user_id string, pos int, value double")
+    w = predicate_windows(
+        df, order_by="pos", partition_by="user_id",
+        start_when=lambda c, a, p, n: c["value"] > 150,
+        end_when=lambda c, a, p, n, sc, sa: c["value"] < 50,
+        tumbling=tumbling, only_end=False).collect()
+    assert any(r.closed for r in w), "no window closes: the test shows nothing"
+    for r in w:
+        assert len(r.window) == r.e_at - r.s_at + 1, r
+        assert r.window[0].value > 150, r
+        assert not r.closed or r.window[-1].value < 50, r
 
 
 def test_column_windows_prune_window_column(spark):
